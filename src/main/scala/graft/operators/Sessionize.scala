@@ -246,7 +246,7 @@ object Sessionize {
       .agg(count(lit(1)).as("n_events"),
            sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
            max(col("value")).as("max_value"))
-    StatefulQueries.withShuffleWidth(spark, 8) {
+    StatefulQueries.withDrainConf(spark, Some(8), keepProvider = true) {
       val q = agg.writeStream.outputMode("update")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, id: Long) =>

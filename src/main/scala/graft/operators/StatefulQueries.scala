@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{LocalCheckpointFileManager, Tables}
 import graft.streaming.StatefulOps
 import graft.streaming.StatefulOps.{KSV, KV}
 
@@ -69,7 +69,7 @@ object StatefulQueries {
     * would leak a full result set. `stateWidth` narrows the shuffle (=
     * state store instance count) for stateful ops; stateless projections
     * leave it unset. */
-  private[operators] def drainToMemory(
+  private[graft] def drainToMemory(
       spark: SparkSession, out: DataFrame, stateWidth: Option[Int] = None,
       outputMode: String = "append")(
       check: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ()): DataFrame = {
@@ -85,50 +85,72 @@ object StatefulQueries {
       } finally {
         if (spark.catalog.tableExists(qn)) spark.catalog.dropTempView(qn)
       }
-    withDrainStateStore(spark) {
-      stateWidth match {
-        case Some(w) => withShuffleWidth(spark, w)(run())
-        case None    => run()
-      }
+    withDrainConf(spark, stateWidth)(run())
+  }
+
+  private val ShuffleWidthKey = "spark.sql.shuffle.partitions"
+  private val ProviderClassKey = "spark.sql.streaming.stateStore.providerClass"
+  private val MemoryDrainProvider =
+    "org.apache.spark.sql.execution.streaming.state.GraftMemoryStateStoreProvider"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with each `key -> value` set on the session conf, restoring
+    * every key on every path (a failed `set` included): a key that was
+    * unset before is unset again, any other gets its prior value back.
+    * "Unset" means not explicitly set — restoring a defaulted key's default
+    * as an explicit value would turn it into a pin, and [[withDrainConf]]
+    * reads an explicit provider or checkpoint manager as the caller's
+    * choice. */
+  private def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val explicit = spark.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.reverseIterator.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
   }
 
-  private val ProviderClassKey = "spark.sql.streaming.stateStore.providerClass"
-  private val EngineDefaultProvider =
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-  private val MemoryDrainProvider =
-    "org.apache.spark.sql.execution.streaming.state.GraftMemoryStateStoreProvider"
-
-  /** Run a memory-sink drain on the heap-only state store provider
-    * ([[org.apache.spark.sql.execution.streaming.state.GraftMemoryStateStoreProvider]]),
-    * restoring the session provider on every path. The drains are bounded
-    * single-JVM replays over ephemeral checkpoints, so the engine default's
-    * per-batch delta-file writes buy no recovery anyone can use — measured
-    * 50–90 ms of summed commitTimeMs per store instance per batch on
-    * kilobyte state (ProbeDrainBreakdown, r20). Two guards keep the swap
-    * honest:
-    *  - a caller that PINNED a provider (withRocksDbStateStore, the TWS
-    *    family) wins — if the session value is anything but the engine
-    *    default, this is a no-op, so the `*_rocksdb`/TWS twins keep
-    *    measuring the production provider;
-    *  - `spark.graft.drain.stateStoreProvider=engine` turns the swap off
-    *    globally (production guidance: multi-node or fault-tolerant jobs,
-    *    or state larger than heap, keep the engine/RocksDB providers —
-    *    the memory provider cannot reload state after executor loss). */
-  private[operators] def withDrainStateStore[T](spark: SparkSession)(body: => T): T = {
-    val mode = spark.conf.getOption("spark.graft.drain.stateStoreProvider")
-      .getOrElse("memory")
-    val current = spark.conf.get(ProviderClassKey, EngineDefaultProvider)
-    if (mode != "memory" || current != EngineDefaultProvider) body
-    else {
-      val prev = spark.conf.getOption(ProviderClassKey)
-      spark.conf.set(ProviderClassKey, MemoryDrainProvider)
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(ProviderClassKey, v)
-        case None    => spark.conf.unset(ProviderClassKey)
-      }
-    }
+  /** The drain conf scope: every `writeStream` in this library starts
+    * inside it. For the run of `body` it sets
+    *  - the shuffle width (= state store instance count) to `width`, if
+    *    given — sized to the key cardinality, not the session default;
+    *  - the checkpoint file manager to [[LocalCheckpointFileManager]]:
+    *    the engine default forks `chmod`/`readlink` processes for every
+    *    offset-log, commit-log and state file it writes without the native
+    *    Hadoop library, about ten per file, on every micro-batch's critical
+    *    path;
+    *  - the state store provider to the heap-only
+    *    [[org.apache.spark.sql.execution.streaming.state.GraftMemoryStateStoreProvider]]:
+    *    the drains are bounded single-JVM replays over ephemeral
+    *    checkpoints, so the engine default's per-batch delta-file writes buy
+    *    no recovery anyone can use (measured 50–90 ms of summed
+    *    commitTimeMs per store instance per batch on kilobyte state,
+    *    ProbeDrainBreakdown, r20). Not for `keepProvider` bodies: a query
+    *    restarted from its checkpoint needs its state back, and a stateful
+    *    foreachBatch sink's commit validation counts commit reports that
+    *    only the engine providers send.
+    * Guards: an EXPLICITLY set provider or checkpoint manager — a caller's
+    * pin, the engine default's class name included — wins over the swap,
+    * so `withRocksDbStateStore` and the TWS family keep measuring the
+    * production provider; and `spark.graft.drain.stateStoreProvider=engine`
+    * turns the provider swap off globally (production guidance: multi-node
+    * or fault-tolerant jobs, or state larger than heap, keep the
+    * engine/RocksDB providers — the memory provider cannot reload state
+    * after executor loss). */
+  private[operators] def withDrainConf[T](spark: SparkSession, width: Option[Int],
+                                          keepProvider: Boolean = false)(body: => T): T = {
+    val pinned = spark.conf.getAll.keySet
+    val memoryState = !keepProvider && !pinned(ProviderClassKey) &&
+      spark.conf.getOption("spark.graft.drain.stateStoreProvider").forall(_ == "memory")
+    val kvs = width.map(w => ShuffleWidthKey -> w.toString).toSeq ++
+      Option.when(!pinned(LocalCheckpointFileManager.ConfKey))(
+        LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName) ++
+      Option.when(memoryState)(ProviderClassKey -> MemoryDrainProvider)
+    withConf(spark, kvs: _*)(body)
   }
 
   /** Run `body` with NO-DATA micro-batches disabled, restoring the session
@@ -139,22 +161,13 @@ object StatefulQueries {
     * (and `processAllAvailable` never sees `noNewData`). A drain whose
     * operator needs no end-of-stream flush — the native-TTL dedup's
     * emission is cumulative — disables them for the run instead. */
-  private[operators] def withNoDataBatchesDisabled[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body
-    finally spark.conf.set(key, prev)
-  }
+  private[operators] def withNoDataBatchesDisabled[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
 
   /** Run `body` with the stateful-shuffle width (= state store instance
     * count) narrowed to `w`, restoring the session value afterwards. */
-  private[operators] def withShuffleWidth[T](spark: SparkSession, w: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", w.toString)
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private[operators] def withShuffleWidth[T](spark: SparkSession, w: Int)(body: => T): T =
+    withConf(spark, ShuffleWidthKey -> w.toString)(body)
 
   private def drainStateful(spark: SparkSession, sfDir: String)
                            (op: DataFrame => DataFrame): DataFrame = {
@@ -170,16 +183,8 @@ object StatefulQueries {
     * the previous value on every path — the flag changes how ANY
     * int64-nanos parquet column is read, so it must not outlive the scope
     * that needed it. */
-  private[operators] def withNanosAsLong[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private[operators] def withNanosAsLong[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(body)
 
   /** Drain scaffold over the `documents` parquet (layout-adaptive via
     * [[Tables.streamTable]]), shared by the
@@ -230,17 +235,8 @@ object StatefulQueries {
     * (q1rdb, the TTL-dedup RocksDB twin) and by transformWithState, which
     * REQUIRES it (each TWS state variable is a column family; the
     * HDFS-backed provider supports only one). */
-  private[operators] def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private[operators] def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, ProviderClassKey -> RocksDbProvider)(body)
 
   /** Drive a streaming op over Spark's SOCKET source: serve `chunks` of
     * text lines from an in-process loopback server ([[graft.io.SocketText]]),
@@ -257,7 +253,7 @@ object StatefulQueries {
       spark: SparkSession, chunks: Seq[Seq[String]], expected: Seq[Long])(
       op: DataFrame => DataFrame)(
       check: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ()): DataFrame =
-    withDrainStateStore(spark) { withShuffleWidth(spark, 8) {
+    withDrainConf(spark, Some(8)) {
       require(chunks.length == expected.length && expected == expected.sorted,
         "expected must give a cumulative sink row count per chunk")
       val srv = new graft.io.SocketText()
@@ -281,7 +277,7 @@ object StatefulQueries {
           if (spark.catalog.tableExists(qn)) spark.catalog.dropTempView(qn)
         }
       } finally srv.close()
-    } }
+    }
 
   /** Poll a memory sink until it holds `n` rows (the socket drain's only
     * completion signal — the source cannot say "done"). Counting a memory
@@ -368,7 +364,7 @@ object StatefulQueries {
     val ckpt = work.resolve("ckpt").toString
     val outDir = work.resolve("out").toString
     val schema = spark.read.parquet(copyDir).schema
-    def runOnce(): Unit = withShuffleWidth(spark, 8) {
+    def runOnce(): Unit = withDrainConf(spark, Some(8), keepProvider = true) {
       val stream = spark.readStream.schema(schema).parquet(srcDir.toString)
       val out = StatefulOps.blockAverage(stream
         .select(col("event_type").as("key"), col("event_id").as("ord"), col("value"))
@@ -462,7 +458,7 @@ object StatefulQueries {
     val dir = timeOrderedFilesCopy(spark, copyTag, names)(frames)
     val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    withShuffleWidth(spark, 8) {
+    withDrainConf(spark, Some(8)) {
       val q = stream.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, id: Long) => perBatch(b, id) }
@@ -1792,7 +1788,7 @@ object StatefulQueries {
       val stream = spark.readStream
         .schema(spark.read.parquet(copyDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(copyDir)
-      withShuffleWidth(spark, 8) {
+      withDrainConf(spark, Some(8)) {
         val q = stream.writeStream.outputMode("append")
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (b: DataFrame, id: Long) =>
@@ -2056,7 +2052,7 @@ object StatefulQueries {
       val stream = spark.readStream
         .schema(spark.read.parquet(copyDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(copyDir)
-      withShuffleWidth(spark, 8) {
+      withDrainConf(spark, Some(8)) {
         val q = stream.writeStream.outputMode("append")
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (b: DataFrame, id: Long) =>
@@ -2170,7 +2166,7 @@ object StatefulQueries {
       s"(got $nFiles replay file(s)) — the bitemporal oracle is stated on that split")
     val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    withShuffleWidth(spark, 8) {
+    withDrainConf(spark, Some(8)) {
       val q = stream.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, id: Long) =>

@@ -93,7 +93,7 @@ object TwsQueries {
     val schema = spark.read.parquet(copyDir).schema
     def runOnce(): Unit =
       StatefulQueries.withRocksDbStateStore(spark) {
-        StatefulQueries.withShuffleWidth(spark, 8) {
+        StatefulQueries.withDrainConf(spark, Some(8), keepProvider = true) {
           val stream = spark.readStream.schema(schema).parquet(srcDir.toString)
           val out = TwsOps.blockAverageTws(stream
             .select(col("event_type").as("key"), col("event_id").as("ord"), col("value"))

@@ -37,8 +37,8 @@ import org.apache.spark.sql.types.StructType
   * executor JVM. A multi-node or fault-tolerant job (lost executor ⇒ lost
   * version history ⇒ query fails instead of recovering) or state larger
   * than heap belongs on the RocksDB provider. The drain scaffold selects
-  * this class only when the session is running the engine default — see
-  * `StatefulQueries.withDrainStateStore` — and
+  * this class only when no provider is set explicitly on the session — see
+  * `StatefulQueries.withDrainConf` — and
   * `spark.graft.drain.stateStoreProvider=engine` restores the engine
   * default for every drain without touching query code. */
 class GraftMemoryStateStoreProvider extends StateStoreProvider {
@@ -198,8 +198,9 @@ class GraftMemoryStateStoreProvider extends StateStoreProvider {
   private class StateMap {
     private val outer =
       new ConcurrentHashMap[UnsafeRow, ConcurrentHashMap[UnsafeRow, UnsafeRow]]()
-    private var keys = 0L
-    private var bytes = 0L
+    // written by the task thread, read by progress reporting on others
+    @volatile private var keys = 0L
+    @volatile private var bytes = 0L
 
     // prefix projection over the leading key columns; built lazily per map
     // (UnsafeProjection is not thread-safe, and each store's tasks are

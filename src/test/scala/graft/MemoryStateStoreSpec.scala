@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Focused gate for the r20 drain state-store swap: every state shape the
@@ -14,8 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - session-window aggregation, the PREFIX-SCAN store (q13ns)
   *  - windowed aggregation with watermark-closed emission (dau closed)
   * Also pins the pinned-provider guard: a drain under
-  * withRocksDbStateStore must NOT be re-routed to the memory provider
-  * (the *_rocksdb twins are the production-provider honesty gate). */
+  * withRocksDbStateStore, or under an explicit pin of the engine default,
+  * must NOT be re-routed to the memory provider (the *_rocksdb twins are
+  * the production-provider honesty gate). */
 class MemoryStateStoreSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -54,13 +58,40 @@ class MemoryStateStoreSpec extends SparkSpec {
   }
 
   test("pinned RocksDB drains stay on RocksDB (provider guard)") {
-    // the rocksdb twin pins the provider BEFORE the drain; the drain hook
-    // must see a non-default provider and leave it alone — proven by the
-    // query running green (the memory provider would throw on the TWS
-    // path) and by the conf being restored afterwards
-    val before = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    SparkEntry.queries("q1rdb_running_max_rocksdb")(spark, sfDir).count()
-    assert(spark.conf.getOption("spark.sql.streaming.stateStore.providerClass") == before,
-      "provider conf leaked out of the RocksDB twin")
+    // a caller that pins a provider BEFORE the drain wins over the memory
+    // swap — the rocksdb twin's own pin, and an explicit pin of the engine
+    // default. Witness: the provider-specific custom state metrics in the
+    // drain's progress reports (the memory provider reports none), and the
+    // session conf being exactly as the caller left it afterwards.
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    val cases = Seq(
+      ("q1rdb_running_max_rocksdb", None, "rocksdbCommit"),
+      ("q1r_running_max_streaming", Some(hdfs), "loadedMapCache"))
+    for ((query, pin, metricPrefix) <- cases) {
+      val metrics = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+          e.progress.stateOperators.foreach(op => metrics.addAll(op.customMetrics.keySet()))
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+          done.countDown()
+      }
+      pin.foreach(spark.conf.set(key, _))
+      val before = spark.conf.getAll.get(key)
+      spark.streams.addListener(listener)
+      try {
+        SparkEntry.queries(query)(spark, sfDir).count()
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), s"$query: no termination event")
+        assert(spark.conf.getAll.get(key) == before, s"$query: provider conf changed by the drain")
+        assert(metrics.asScala.exists(_.startsWith(metricPrefix)),
+          s"$query pinned to ${pin.getOrElse("RocksDB")}: no $metricPrefix* state metric " +
+            s"(got ${metrics.asScala.toSeq.sorted}) — the drain ran on another provider")
+      } finally {
+        spark.streams.removeListener(listener)
+        pin.foreach(_ => spark.conf.unset(key))
+      }
+    }
   }
 }

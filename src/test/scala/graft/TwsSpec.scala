@@ -25,7 +25,7 @@ class TwsSpec extends SparkSpec {
     val src = java.nio.file.Files.createTempDirectory("tws-spec-src-")
     val ckpt = java.nio.file.Files.createTempDirectory("tws-spec-ckpt-")
     val qn = s"tws_spec_${System.nanoTime()}"
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    val prev = spark.conf.getAll.get("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
@@ -97,7 +97,7 @@ class TwsSpec extends SparkSpec {
     val src = java.nio.file.Files.createTempDirectory("tws-sess-src-")
     val ckpt = java.nio.file.Files.createTempDirectory("tws-sess-ckpt-")
     val qn = s"tws_sess_${System.nanoTime()}"
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    val prev = spark.conf.getAll.get("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
@@ -272,7 +272,7 @@ class TwsSpec extends SparkSpec {
     // generation. Expiry is real, observable, and the reason the sizing
     // rule (TTL >= ingestion lag + horizon in processing time) exists.
     def run(ttl: org.apache.spark.sql.streaming.TTLConfig): Seq[(Long, Long)] = {
-      val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+      val prev = spark.conf.getAll.get("spark.sql.streaming.stateStore.providerClass")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // no-data batches off, or processAllAvailable never sees noNewData
