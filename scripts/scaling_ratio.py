@@ -59,7 +59,8 @@ PAIR_GOVERNED = {
 
 def read_pair_observables(verify_dir):
     """Read the pair-volume observables' committed numbers from a
-    graft.Verify parquet dump; missing outputs are reported, not fatal."""
+    graft.Verify parquet dump. A missing, unreadable or not-exactly-one-row
+    output becomes an error entry for that observable, not a fatal error."""
     import glob
     try:
         import pandas as pd
@@ -71,7 +72,16 @@ def read_pair_observables(verify_dir):
         if not files:
             obs[name] = {"error": f"no parquet under {verify_dir}/{name}"}
             continue
-        row = pd.concat([pd.read_parquet(f) for f in files]).iloc[0]
+        try:
+            df = pd.concat([pd.read_parquet(f) for f in files])
+        except Exception as e:  # corrupt/unreadable file: report, don't abort
+            obs[name] = {"error": f"unreadable parquet under {verify_dir}/{name}: {e}"}
+            continue
+        if len(df) != 1:
+            obs[name] = {"error": f"expected exactly 1 row under {verify_dir}/{name}, "
+                                  f"got {len(df)}"}
+            continue
+        row = df.iloc[0]
         obs[name] = {k: int(row[k]) for k in row.index
                      if k in ("candidate_pairs", "dropped_pairs",
                               "n_terms_indexed", "n_shingles_indexed",

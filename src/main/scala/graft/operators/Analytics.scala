@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.{Duration, DurationInt}
 import graft.io.Tables
 
 /** Statistical / sequence / graph analytics: exact-moment linear
@@ -53,6 +55,25 @@ object Analytics {
     * constant is the gate-scale setting, not a claim. */
   private def withWidth[T](spark: SparkSession, w: Int)(body: => T): T =
     StatefulQueries.withShuffleWidth(spark, w)(body)
+
+  /** How long a failure path waits for an overlapped sibling future. */
+  private val SiblingWaitBound: Duration = 5.minutes
+
+  /** Failure path of two graph cores run overlapped: wait for the sibling
+    * future `f` — so the caller's finally does not release a cache the
+    * sibling still reads — for at most `bound`, then rethrow `t`, the
+    * original failure. A wait that times out rides along as a suppressed
+    * exception: a wedged sibling must not turn a surfaced failure into a
+    * hang. */
+  private[graft] def awaitSiblingThenThrow(f: Future[_], t: Throwable,
+                                           bound: Duration = SiblingWaitBound): Nothing = {
+    try Await.ready(f, bound)
+    catch { case e: Throwable =>
+      t.addSuppressed(e)
+      if (e.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
+    }
+    throw t
+  }
 
   /** Fixed hour-index base (epoch hours) shared with the oracle SQL: the
     * regressor is HOURS SINCE this base, not raw epoch hours, keeping every
@@ -1719,13 +1740,10 @@ object Analytics {
         .select(col("user_id").as("node")).distinct()
       // LPA on a second driver thread, CC on this one; await INSIDE the
       // withWidth scope so the narrow width outlives both cores. The
-      // future is ALSO awaited on the failure path (Await.ready in the
-      // catch): if lshComponentsOf throws first, the outer finally would
-      // otherwise unpersist the shared edge cache under a still-running
-      // LPA (recompute-from-lineage churn) and drop LPA's own failure
-      // silently (r19 advice #2)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
+      // future is ALSO awaited, bounded, on the failure path
+      // (awaitSiblingThenThrow): if lshComponentsOf throws first, the outer
+      // finally would otherwise unpersist the shared edge cache under a
+      // still-running LPA (recompute-from-lineage churn)
       import scala.concurrent.ExecutionContext.Implicits.global
       val lpaF = Future(labelPropOf(spark, nodes, e, rounds = 4))
       // the ccUsers construction over the same cached edges (singletons
@@ -1733,10 +1751,7 @@ object Analytics {
       // to Q — only edge-adjacent labels enter the fold)
       val comp = try Dedup.lshComponentsOf(
         e.select(col("u").as("doc_a"), col("v").as("doc_b")))
-      catch { case t: Throwable =>
-        try Await.ready(lpaF, Duration.Inf) catch { case _: Throwable => () }
-        throw t
-      }
+      catch { case t: Throwable => awaitSiblingThenThrow(lpaF, t) }
       val lpa = Await.result(lpaF, Duration.Inf)
       val cc = nodes.join(
           comp.select(col("doc_id").as("node"), col("component")),
@@ -2275,8 +2290,6 @@ object Analytics {
       // the wedge aggregate rides a second driver thread while the triangle
       // core runs (the communityModularity §2.6 overlap; both consumers are
       // read-only over the shared cache and 1-row deterministic)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val deg = ce.select(col("u").as("n")).unionAll(ce.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).cast("long").as("d"))
@@ -2286,10 +2299,7 @@ object Analytics {
       // failure-path await (r19 advice #2): the finally must not release
       // the shared cache while the wedge job still runs
       val tri = try triangleCountOf(spark, ce)
-      catch { case t: Throwable =>
-        try Await.ready(wedgesF, Duration.Inf) catch { case _: Throwable => () }
-        throw t
-      }
+      catch { case t: Throwable => awaitSiblingThenThrow(wedgesF, t) }
       (tri, Await.result(wedgesF, Duration.Inf))
     } finally ce.unpersist(blocking = false)
     tri.crossJoin(broadcast(wedges))

@@ -105,17 +105,14 @@ object Dedup {
     * die against batch 1's state). */
   def exactWwmStreaming(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = orderedTtlReplayDir(spark, sfDir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val stream = StatefulQueries.replayStream(spark, dir)
       .withWatermark("ts", "90 days")
       .dropDuplicatesWithinWatermark("fp")
       .select(col("fp").as("fp_md5"))
-    val raw = StatefulQueries.drainToMemory(spark, stream, stateWidth = Some(8)) { q =>
-      // cross-batch witness: the drain must have run one batch per file,
-      // so later files' duplicate fingerprints met batch-1 state
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 3, s"expected >=3 data batches, saw $batches")
+    // cross-batch witness: the drain must have run one batch per file, so
+    // later files' duplicate fingerprints met batch-1 state
+    val raw = StatefulQueries.drainToMemory(spark, stream, stateWidth = Some(8)) {
+      StatefulQueries.requireDataBatches(_, 3, "the 3-file within-watermark dedup replay")
     }
     raw.filter(!(col("fp_md5") <=> TtlSentinelFp)).orderBy(col("fp_md5"))
   }
@@ -154,28 +151,17 @@ object Dedup {
       org.apache.spark.sql.Encoders.product[StatefulOps.TtlRec]
     val SentinelFp = "sentinel"
     val dir = orderedTtlReplayDir(spark, sfDir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val stream = StatefulQueries.replayStream(spark, dir)
       .withWatermark("ts", "0 seconds")
       .select(col("fp"), col("ts"), col("id")).as[StatefulOps.TtlRec]
+    // the TTL witness, from the engine's own state-store metrics: expiry
+    // removed rows, and at most the sentinel's own state survives the
+    // final (timeout-firing) batch; an empty corpus replays only the
+    // sentinel row, with nothing for the watermark to expire
     val raw = StatefulQueries.drainToMemory(spark,
         StatefulOps.ttlDedupStream(stream, horizonUs).toDF(),
-        stateWidth = Some(8)) { q =>
-      // the TTL witness, from the engine's own state-store metrics: expiry
-      // removed rows, and at most the sentinel's own state survives the
-      // final (timeout-firing) batch
-      val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
-      require(progs.nonEmpty, "no state-operator progress recorded")
-      val removed = progs.map(_.stateOperators(0).numRowsRemoved).sum
-      val left = progs.last.stateOperators(0).numRowsTotal
-      // an empty corpus replays only the sentinel row: one state entry,
-      // nothing for the watermark to expire — the removal witness applies
-      // once ANY real fingerprint entered the store
-      val totalRows = q.recentProgress.map(_.numInputRows).sum
-      require((removed > 0 || totalRows <= 1) && left <= 1,
-        s"event-time TTL did not bound state: removed=$removed, left=$left — " +
-          "expiry must drop every fingerprint the watermark passed")
+        stateWidth = Some(8)) {
+      StatefulQueries.requireStateBounded(_, 1, "event-time TTL expiry")
     }
     // null-safe: `=!=` would also drop a NULL fingerprint group (null
     // event_type/props make the md5 NULL) that the oracle keeps
@@ -193,21 +179,19 @@ object Dedup {
     * change point, far-future sentinel last) — ONE cached copy serves the
     * fMGWS event-time-expiry form and the TWS native-TTL form. */
   private[graft] def orderedTtlReplayDir(spark: SparkSession, sfDir: String): String =
-    StatefulQueries.withNanosAsLong(spark) {
-      StatefulQueries.timeOrderedFilesCopy(spark, s"ttldedup:$sfDir",
-          Seq("t0.parquet", "t1.parquet", "t2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(md5(concat(col("event_type"), lit("|"), col("props"))).as("fp"),
-                  timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("event_id").as("id"))
-        def sentinel(afterUs: Long) = spark.range(1).select(
-          lit(TtlSentinelFp).as("fp"),
-          timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
-          lit(-1L).as("id"))
-        // split/sentinel contract lives in ONE place — see
-        // StatefulQueries.medianSplitWithSentinel
-        StatefulQueries.medianSplitWithSentinel(ev, "id", "ts")(sentinel)
-      }
+    StatefulQueries.timeOrderedFilesCopy(spark, s"ttldedup:$sfDir",
+        Seq("t0.parquet", "t1.parquet", "t2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(md5(concat(col("event_type"), lit("|"), col("props"))).as("fp"),
+                timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("event_id").as("id"))
+      def sentinel(afterUs: Long) = spark.range(1).select(
+        lit(TtlSentinelFp).as("fp"),
+        timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
+        lit(-1L).as("id"))
+      // split/sentinel contract lives in ONE place — see
+      // StatefulQueries.medianSplitWithSentinel
+      StatefulQueries.medianSplitWithSentinel(ev, "id", "ts")(sentinel)
     }
 
   /** [[exactTtlStreaming]] on TWS NATIVE STATE TTL
@@ -253,19 +237,17 @@ object Dedup {
                            horizonUs: Long = TtlHorizonUs): DataFrame = {
     import graft.streaming.StatefulOps
     val slackUs = horizonUs / 2
-    val dir = StatefulQueries.withNanosAsLong(spark) {
-      StatefulQueries.timeOrderedFilesCopy(spark, s"ttlooodedup:$sfDir",
-          Seq("t0.parquet", "t1.parquet", "t2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(md5(concat(col("event_type"), lit("|"), col("props"))).as("fp"),
-                  timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("event_id").as("id"))
-        def sentinel(afterUs: Long) = spark.range(1).select(
-          lit(TtlSentinelFp).as("fp"),
-          timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
-          lit(-1L).as("id"))
-        StatefulQueries.disorderedSplitWithSentinel(ev, "id", "ts", slackUs)(sentinel)
-      }
+    val dir = StatefulQueries.timeOrderedFilesCopy(spark, s"ttlooodedup:$sfDir",
+        Seq("t0.parquet", "t1.parquet", "t2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(md5(concat(col("event_type"), lit("|"), col("props"))).as("fp"),
+                timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("event_id").as("id"))
+      def sentinel(afterUs: Long) = spark.range(1).select(
+        lit(TtlSentinelFp).as("fp"),
+        timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
+        lit(-1L).as("id"))
+      StatefulQueries.disorderedSplitWithSentinel(ev, "id", "ts", slackUs)(sentinel)
     }
     ttlDrainOf(spark, dir, s"${slackUs / 1000000L + 3600L} seconds", horizonUs,
       StatefulOps.ttlDedupOooStream, requireExpiry = true)
@@ -292,23 +274,13 @@ object Dedup {
     import graft.streaming.StatefulOps
     implicit val enc: org.apache.spark.sql.Encoder[StatefulOps.TtlRec] =
       org.apache.spark.sql.Encoders.product[StatefulOps.TtlRec]
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val stream = StatefulQueries.replayStream(spark, dir)
       .withWatermark("ts", delay)
       .select(col("fp"), col("ts"), col("id")).as[StatefulOps.TtlRec]
     val raw = StatefulQueries.drainToMemory(spark, op(stream, horizonUs).toDF(),
         stateWidth = Some(8)) { q =>
-      if (requireExpiry) {
-        val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
-        require(progs.nonEmpty, "no state-operator progress recorded")
-        val removed = progs.map(_.stateOperators(0).numRowsRemoved).sum
-        val left = progs.last.stateOperators(0).numRowsTotal
-        val totalRows = q.recentProgress.map(_.numInputRows).sum
-        require((removed > 0 || totalRows <= 1) && left <= 1,
-          s"TTL did not bound state: removed=$removed, left=$left — " +
-            "every finalized fingerprint must leave the store")
-      }
+      // every finalized fingerprint must leave the store
+      if (requireExpiry) StatefulQueries.requireStateBounded(q, 1, "TTL finalization")
     }
     raw.filter(!(col("fp") <=> TtlSentinelFp))
       .groupBy(col("fp"), col("start_us"))

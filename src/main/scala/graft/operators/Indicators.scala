@@ -81,18 +81,14 @@ object Indicators {
     * cardinality). Same oracle as the batch form — a bar whose open was
     * set in batch 1 must survive ticks arriving in batch 2. */
   def ohlcHourlyStream(spark: SparkSession, sfDir: String): DataFrame =
-    StatefulQueries.withNanosAsLong(spark) {
-      val stream = Tables.normalizeEvents(Tables.streamTable(spark, sfDir, "events"))
-      val agg = stream
-        .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_start"),
-                 col("event_type"))
+    StatefulQueries.drainEvents(spark, sfDir, outputMode = "complete") {
+      _.groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_start"),
+                col("event_type"))
         .agg(min_by(col("value"), col("event_id")).as("open"),
              max(col("value")).as("high"),
              min(col("value")).as("low"),
              max_by(col("value"), col("event_id")).as("close"),
              count(lit(1)).as("n_events"))
-      StatefulQueries.drainToMemory(spark, agg,
-        stateWidth = Some(8), outputMode = "complete")()
     }.orderBy(col("hour_start"), col("event_type"))
 
   /** SMA CROSSOVER SIGNALS — golden/death crosses of a fast moving
@@ -157,22 +153,22 @@ object Indicators {
     * row left in state. Oracle: the batch [[ohlcHourly]] SQL — with the
     * sentinel flush all real bars are closed, so "restricted to closed
     * bars" is the full bar table. */
-  def ohlcHourlyClosed(spark: SparkSession, sfDir: String): DataFrame =
-    StatefulQueries.withNanosAsLong(spark) {
-      val dir = StatefulQueries.timeOrderedFilesCopy(spark, s"ohlcclosed:$sfDir",
-          Seq("o0.parquet", "o1.parquet", "o2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("event_id"), timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("event_type"), col("value"))
-        def sentinel(maxUs: Long) = ev.sparkSession.range(1).select(
-          lit(-1L).as("event_id"),
-          timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
-          lit(OhlcSentinelType).as("event_type"),
-          lit(0.0).as("value"))
-        StatefulQueries.medianSplitWithSentinel(ev, "event_id", "ts")(sentinel)
-      }
-      closedBarDrain(spark, dir, requireEviction = true)
-    }.orderBy(col("hour_start"), col("event_type"))
+  def ohlcHourlyClosed(spark: SparkSession, sfDir: String): DataFrame = {
+    val dir = StatefulQueries.timeOrderedFilesCopy(spark, s"ohlcclosed:$sfDir",
+        Seq("o0.parquet", "o1.parquet", "o2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("event_id"), timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("event_type"), col("value"))
+      def sentinel(maxUs: Long) = ev.sparkSession.range(1).select(
+        lit(-1L).as("event_id"),
+        timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
+        lit(OhlcSentinelType).as("event_type"),
+        lit(0.0).as("value"))
+      StatefulQueries.medianSplitWithSentinel(ev, "event_id", "ts")(sentinel)
+    }
+    closedBarDrain(spark, dir, requireEviction = true)
+      .orderBy(col("hour_start"), col("event_type"))
+  }
 
   /** The append-mode closed-bar drain behind [[ohlcHourlyClosed]] and the
     * IndicatorsSpec late-tick fixture: watermarked file replay → windowed
@@ -185,11 +181,8 @@ object Indicators {
       spark: SparkSession, dir: String, requireEviction: Boolean,
       extraCheck: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ())
       : DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val agg = StatefulQueries.replayStream(spark, dir)
       .withWatermark("ts", "0 seconds")
-    val agg = stream
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(min_by(col("value"), col("event_id")).as("open"),
            max(col("value")).as("high"),
@@ -197,16 +190,8 @@ object Indicators {
            max_by(col("value"), col("event_id")).as("close"),
            count(lit(1)).as("n_events"))
     StatefulQueries.drainToMemory(spark, agg, stateWidth = Some(8)) { q =>
-      if (requireEviction) {
-        val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
-        require(progs.nonEmpty, "no state-operator progress recorded")
-        val removed = progs.map(_.stateOperators(0).numRowsRemoved).sum
-        val left = progs.last.stateOperators(0).numRowsTotal
-        val totalRows = q.recentProgress.map(_.numInputRows).sum
-        require((removed > 0 || totalRows <= 1) && left <= 1,
-          s"closed-bar emission did not bound state: removed=$removed, left=$left — " +
-            "every closed bar must leave the store")
-      }
+      // every closed bar must leave the store
+      if (requireEviction) StatefulQueries.requireStateBounded(q, 1, "closed-bar emission")
       extraCheck(q)
     }
       .filter(col("event_type") =!= OhlcSentinelType)
@@ -240,9 +225,9 @@ object Indicators {
       frames.indices.map(i => s"c$i.parquet"))(frames)
     var dropped = 0L
     val bars = closedBarDrain(spark, dir, requireEviction = true, { q =>
-      q.recentProgress.foreach(onProgress)
-      dropped = q.recentProgress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
+      val ps = q.recentProgress
+      ps.foreach(onProgress)
+      dropped = ps.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
     })
     (bars, dropped)
   }
@@ -294,11 +279,9 @@ object Indicators {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val HourUs = 3600000000L
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val side = StatefulQueries.replayStream(spark, dir)
       .withWatermark("ts", "0 seconds")
-    val side = stream.as[LateTick]
+      .as[LateTick]
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[Long, LateOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
@@ -330,25 +313,24 @@ object Indicators {
     * The ENGINE still decides per row (the tagger never sees the 97): a
     * watermark-plumbing bug surfaces as a hash mismatch, not a silent
     * drop. */
-  def ohlcLateSideOutput(spark: SparkSession, sfDir: String): DataFrame =
-    StatefulQueries.withNanosAsLong(spark) {
-      val dir = StatefulQueries.timeOrderedFilesCopy(spark, s"ohlclate:$sfDir",
-          Seq("l0.parquet", "l1.parquet", "l2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("event_id"), timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("event_type"), col("value"))
-        val maxRow = ev.agg(max(unix_micros(col("ts")))).head()
-        val maxUs = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-        val carriers = ev.select(col("event_type")).distinct().select(
-          lit(-1L).as("event_id"),
-          timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
-          col("event_type"),
-          lit(0.0).as("value"))
-        Seq(ev.filter(col("event_id") % 97 =!= 0), carriers,
-            ev.filter(col("event_id") % 97 === 0))
-      }
-      lateSideOutputDrain(spark, dir)
-    }.orderBy(col("event_id"))
+  def ohlcLateSideOutput(spark: SparkSession, sfDir: String): DataFrame = {
+    val dir = StatefulQueries.timeOrderedFilesCopy(spark, s"ohlclate:$sfDir",
+        Seq("l0.parquet", "l1.parquet", "l2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("event_id"), timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("event_type"), col("value"))
+      val maxRow = ev.agg(max(unix_micros(col("ts")))).head()
+      val maxUs = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
+      val carriers = ev.select(col("event_type")).distinct().select(
+        lit(-1L).as("event_id"),
+        timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
+        col("event_type"),
+        lit(0.0).as("value"))
+      Seq(ev.filter(col("event_id") % 97 =!= 0), carriers,
+          ev.filter(col("event_id") % 97 === 0))
+    }
+    lateSideOutputDrain(spark, dir).orderBy(col("event_id"))
+  }
 
   /** [[closedBarReplayOf]]'s side-output twin for specs: BOTH outputs of
     * the same replayed tape — the closed bars and the engine-routed late

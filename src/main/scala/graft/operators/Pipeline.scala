@@ -140,11 +140,8 @@ object Pipeline {
         if (halves.isEmpty) Seq(d) else halves
       }
     }
-    val nFiles = {
-      val l = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      try l.count().toInt finally l.close()
-    }
-    StatefulQueries.drainOrderedFiles(spark, dir, minBatches = nFiles) { stream =>
+    StatefulQueries.drainOrderedFiles(spark, dir,
+        minBatches = StatefulQueries.replayFileCount(dir)) { stream =>
       StatefulOps.manifestDedupStream(
         TextOps.corpusGatesOf(stream,
             extra = Seq(fingerprintMd5(col("text")).as("fp")))

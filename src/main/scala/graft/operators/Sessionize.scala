@@ -191,16 +191,12 @@ object Sessionize {
     // session default — every shuffle partition is a state-store instance
     // paying snapshot+commit I/O per micro-batch. Conf hygiene (nanos flag,
     // shuffle width, sink view) is the shared scaffold's contract.
-    StatefulQueries.withNanosAsLong(spark) {
-      val stream = Tables.normalizeEvents(Tables.streamTable(spark, sfDir, "events"))
-      val agg = stream
-        .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_start"),
-                 col("event_type"))
+    StatefulQueries.drainEvents(spark, sfDir, outputMode = "complete") {
+      _.groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_start"),
+                col("event_type"))
         .agg(count(lit(1)).as("n_events"),
              sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
              max(col("value")).as("max_value"))
-      StatefulQueries.drainToMemory(spark, agg,
-        stateWidth = Some(8), outputMode = "complete")()
     }.orderBy(col("hour_start"), col("event_type"))
   }
 
@@ -238,9 +234,7 @@ object Sessionize {
           ev.filter(col("event_id") % 2 === 1).drop("event_id")).filter(!_.isEmpty)
     }
     val outDir = java.nio.file.Files.createTempDirectory("graft-fb-journal-").toString
-    val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val agg = stream
+    val agg = StatefulQueries.replayStream(spark, dir)
       .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_start"),
                col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -254,8 +248,7 @@ object Sessionize {
         }
         .start()
       q.awaitTermination()
-      require(q.recentProgress.count(_.numInputRows > 0) >= 2,
-        "the two-file replay did not produce two data micro-batches")
+      StatefulQueries.requireDataBatches(q, 2, "the two-file update-mode replay")
     }
     val journal = spark.read.parquet(outDir)
     require(journal.groupBy(col("hour_start"), col("event_type"))
@@ -394,21 +387,19 @@ object Sessionize {
     * the timeout-based and native streaming sessionizers — one copy per
     * sfDir, cached. */
   private def sessionReplayDir(spark: SparkSession, sfDir: String): String =
-    StatefulQueries.withNanosAsLong(spark) {
-      StatefulQueries.timeOrderedFilesCopy(spark, s"sessions:$sfDir",
-          Seq("s0.parquet", "s1.parquet", "s2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("user_id").cast("string").as("key"),
-                  timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("event_id"))
-        def sentinel(afterUs: Long) = spark.range(1).select(
-          lit(SessSentinelKey).as("key"),
-          timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"))
-        // split/sentinel contract lives in ONE place — see
-        // StatefulQueries.medianSplitWithSentinel
-        StatefulQueries.medianSplitWithSentinel(ev, "event_id", "ts",
-          project = _.select(col("key"), col("ts")))(sentinel)
-      }
+    StatefulQueries.timeOrderedFilesCopy(spark, s"sessions:$sfDir",
+        Seq("s0.parquet", "s1.parquet", "s2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("user_id").cast("string").as("key"),
+                timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("event_id"))
+      def sentinel(afterUs: Long) = spark.range(1).select(
+        lit(SessSentinelKey).as("key"),
+        timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"))
+      // split/sentinel contract lives in ONE place — see
+      // StatefulQueries.medianSplitWithSentinel
+      StatefulQueries.medianSplitWithSentinel(ev, "event_id", "ts",
+        project = _.select(col("key"), col("ts")))(sentinel)
     }
 
   /** [[sessionizeNative]] through the real micro-batch engine: the SAME
@@ -424,7 +415,7 @@ object Sessionize {
                                 gapMinutes: Int = 60): DataFrame = {
     val gapUs = gapMinutes.toLong * 60L * 1000000L
     val dir = sessionReplayDir(spark, sfDir)
-    val agg = replayStream(spark, dir)
+    val agg = watermarkedReplay(spark, dir)
       .groupBy(col("key"),
                session_window(col("ts"), s"${gapUs + 1L} microseconds").as("sw"))
       .agg(count(lit(1)).as("n_events"))
@@ -451,7 +442,7 @@ object Sessionize {
       org.apache.spark.sql.Encoders.product[SessionEv]
     val SentinelKey = SessSentinelKey
     val dir = sessionReplayDir(spark, sfDir)
-    val stream = replayStream(spark, dir)
+    val stream = watermarkedReplay(spark, dir)
       .select(col("key"), col("ts")).as[SessionEv]
     val sess = drainReplay(spark, dir,
       StatefulOps.sessionizeStream(stream, gapMinutes).toDF(),
@@ -504,34 +495,25 @@ object Sessionize {
     * and the TWS timer form (q13o / q13t). */
   private[graft] def disorderedSessionReplayDir(spark: SparkSession, sfDir: String,
                                                 slackUs: Long): String =
-    StatefulQueries.withNanosAsLong(spark) {
-      StatefulQueries.timeOrderedFilesCopy(spark, s"sessionsooo:$sfDir",
-          Seq("s0.parquet", "s1.parquet", "s2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("user_id").cast("string").as("key"),
-                  timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("event_id"))
-        def sentinel(afterUs: Long) = spark.range(1).select(
-          lit(SessSentinelKey).as("key"),
-          timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
-          lit(-1L).as("event_id"))
-        StatefulQueries.disorderedSplitWithSentinel(ev, "event_id", "ts", slackUs)(sentinel)
-      }
+    StatefulQueries.timeOrderedFilesCopy(spark, s"sessionsooo:$sfDir",
+        Seq("s0.parquet", "s1.parquet", "s2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("user_id").cast("string").as("key"),
+                timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("event_id"))
+      def sentinel(afterUs: Long) = spark.range(1).select(
+        lit(SessSentinelKey).as("key"),
+        timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
+        lit(-1L).as("event_id"))
+      StatefulQueries.disorderedSplitWithSentinel(ev, "event_id", "ts", slackUs)(sentinel)
     }
 
-  /** The session drain scaffold behind the out-of-order form and the
-    * SessionStreamSpec fixtures: replay `dir` through `op` with the given
-    * watermark delay, optionally require the state-expiry witness, strip
-    * the sentinel, rank per-user session ordinals. `private[graft]` so the
-    * spec can replay hand-built disorder through BOTH ops. */
   /** Watermarked one-file-per-micro-batch stream over a replay dir — the
     * common front half of every split+sentinel drain (0s delay for ordered
     * replays; disordered replays pass a delay covering their slack). */
-  private def replayStream(spark: SparkSession, dir: String,
-                           delay: String = "0 seconds"): DataFrame =
-    spark.readStream.schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-      .withWatermark("ts", delay)
+  private def watermarkedReplay(spark: SparkSession, dir: String,
+                                delay: String = "0 seconds"): DataFrame =
+    StatefulQueries.replayStream(spark, dir).withWatermark("ts", delay)
 
   /** Drain `out` to memory requiring one data micro-batch per replay file —
     * the shared gate that the split+sentinel replay genuinely exercised
@@ -539,18 +521,17 @@ object Sessionize {
     * accounting must not have to land at every drain site). */
   private def drainReplay(spark: SparkSession, dir: String, out: DataFrame,
                           witness: String): DataFrame = {
-    val nFiles = {
-      val l = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      try l.count().toInt finally l.close()
-    }
-    StatefulQueries.drainToMemory(spark, out, stateWidth = Some(8)) { q =>
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches >= nFiles,
-        s"expected >= $nFiles data micro-batches, saw $dataBatches — the split+sentinel " +
-          s"replay did not exercise $witness")
+    val nFiles = StatefulQueries.replayFileCount(dir)
+    StatefulQueries.drainToMemory(spark, out, stateWidth = Some(8)) {
+      StatefulQueries.requireDataBatches(_, nFiles, s"the split+sentinel replay ($witness)")
     }
   }
 
+  /** The session drain scaffold behind the out-of-order form and the
+    * SessionStreamSpec fixtures: replay `dir` through `op` with the given
+    * watermark delay, optionally require the state-expiry witness, strip
+    * the sentinel, rank per-user session ordinals. `private[graft]` so the
+    * spec can replay hand-built disorder through BOTH ops. */
   private[graft] def sessDrainOf(
       spark: SparkSession, dir: String, delay: String, gapMinutes: Int,
       op: (org.apache.spark.sql.Dataset[graft.streaming.StatefulOps.SessionEv], Int) =>
@@ -559,26 +540,14 @@ object Sessionize {
     import graft.streaming.StatefulOps
     implicit val enc: org.apache.spark.sql.Encoder[StatefulOps.SessionEv] =
       org.apache.spark.sql.Encoders.product[StatefulOps.SessionEv]
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-      .withWatermark("ts", delay)
+    val stream = watermarkedReplay(spark, dir, delay)
       .select(col("key"), col("ts")).as[StatefulOps.SessionEv]
     val sess = StatefulQueries.drainToMemory(spark, op(stream, gapMinutes).toDF(),
         stateWidth = Some(8)) { q =>
-      if (requireExpiry) {
-        // the finalization witness, from the engine's own state-store
-        // metrics: emitted sessions left the store, and at most the
-        // sentinel's own pending row survives the final batch
-        val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
-        require(progs.nonEmpty, "no state-operator progress recorded")
-        val removed = progs.map(_.stateOperators(0).numRowsRemoved).sum
-        val left = progs.last.stateOperators(0).numRowsTotal
-        val totalRows = q.recentProgress.map(_.numInputRows).sum
-        require((removed > 0 || totalRows <= 1) && left <= 1,
-          s"session finalization did not bound state: removed=$removed, left=$left — " +
-            "every emitted session must leave the store")
-      }
+      // the finalization witness, from the engine's own state-store
+      // metrics: emitted sessions left the store, and at most the
+      // sentinel's own pending row survives the final batch
+      if (requireExpiry) StatefulQueries.requireStateBounded(q, 1, "session finalization")
     }
     val byStart = Window.partitionBy(col("user_id")).orderBy(col("start_us"))
     // null-safe: `=!=` would also drop a NULL-key group that the oracle keeps
@@ -725,20 +694,15 @@ object Sessionize {
     * drain (overlapping windows stay open across batches until the final
     * trigger re-emits the whole table). Same oracle as the batch form, so
     * streaming-sliding ≡ batch-sliding is hash-checked. */
-  def slidingHalfHourStream(spark: SparkSession, sfDir: String): DataFrame = {
-    StatefulQueries.withNanosAsLong(spark) {
-      val stream = Tables.normalizeEvents(Tables.streamTable(spark, sfDir, "events"))
-      val agg = stream
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
+  def slidingHalfHourStream(spark: SparkSession, sfDir: String): DataFrame =
+    StatefulQueries.drainEvents(spark, sfDir, outputMode = "complete") {
+      _.groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
              sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
              max(col("value")).as("max_value"))
         .select(unix_timestamp(col("window.start")).as("win_start"),
                 col("event_type"), col("n_events"), col("sum_value"), col("max_value"))
-      StatefulQueries.drainToMemory(spark, agg,
-        stateWidth = Some(8), outputMode = "complete")()
     }.orderBy(col("win_start"), col("event_type"))
-  }
 
   /** LAST-TOUCH ATTRIBUTION: for every purchase, the same user's most
     * recent strictly-preceding `view` within a 24 h lookback (NULL when no
@@ -1146,7 +1110,7 @@ object Sessionize {
     implicit val locfEvEnc: org.apache.spark.sql.Encoder[LocfEv] =
       org.apache.spark.sql.Encoders.product[LocfEv]
     val dir = locfReplayDir(spark, sfDir)
-    val stream = replayStream(spark, dir)
+    val stream = watermarkedReplay(spark, dir)
       .select(col("key"), col("ts"), col("value")).as[LocfEv]
     val filled = drainReplay(spark, dir,
       StatefulOps.gapfillLocfStream(stream).toDF(),
@@ -1176,7 +1140,7 @@ object Sessionize {
       org.apache.spark.sql.Encoders.product[LocfEv]
     val slackUs = 2L * 3600L * 1000000L
     val dir = locfOooReplayDir(spark, sfDir, slackUs)
-    val stream = replayStream(spark, dir, s"${slackUs / 1000000L + 3600L} seconds")
+    val stream = watermarkedReplay(spark, dir, s"${slackUs / 1000000L + 3600L} seconds")
       .select(col("key"), col("ts"), col("value")).as[LocfEv]
     val filled = drainReplay(spark, dir,
       StatefulOps.gapfillLocfOooStream(stream).toDF(),
@@ -1192,19 +1156,17 @@ object Sessionize {
     * (ts, value) rows), one cached copy per sfDir. */
   private def locfOooReplayDir(spark: SparkSession, sfDir: String,
                                slackUs: Long): String =
-    StatefulQueries.withNanosAsLong(spark) {
-      StatefulQueries.timeOrderedFilesCopy(spark, s"locfooo:$sfDir",
-          Seq("l0.parquet", "l1.parquet", "l2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("event_type").as("key"),
-                  timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("value"), col("event_id"))
-        def sentinel(afterUs: Long) = spark.range(1).select(
-          lit(SessSentinelKey).as("key"),
-          timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
-          lit(0.0).as("value"), lit(-1L).as("event_id"))
-        StatefulQueries.disorderedSplitWithSentinel(ev, "event_id", "ts", slackUs)(sentinel)
-      }
+    StatefulQueries.timeOrderedFilesCopy(spark, s"locfooo:$sfDir",
+        Seq("l0.parquet", "l1.parquet", "l2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("event_type").as("key"),
+                timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("value"), col("event_id"))
+      def sentinel(afterUs: Long) = spark.range(1).select(
+        lit(SessSentinelKey).as("key"),
+        timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
+        lit(0.0).as("value"), lit(-1L).as("event_id"))
+      StatefulQueries.disorderedSplitWithSentinel(ev, "event_id", "ts", slackUs)(sentinel)
     }
 
   /** The split+sentinel gap-fill replay: event_type-keyed (ts, value) rows
@@ -1212,19 +1174,17 @@ object Sessionize {
     * [[StatefulQueries.medianSplitWithSentinel]] contract, one cached copy
     * per sfDir. */
   private def locfReplayDir(spark: SparkSession, sfDir: String): String =
-    StatefulQueries.withNanosAsLong(spark) {
-      StatefulQueries.timeOrderedFilesCopy(spark, s"locf:$sfDir",
-          Seq("l0.parquet", "l1.parquet", "l2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("event_type").as("key"),
-                  timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("value"), col("event_id"))
-        def sentinel(afterUs: Long) = spark.range(1).select(
-          lit(SessSentinelKey).as("key"),
-          timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
-          lit(0.0).as("value"))
-        StatefulQueries.medianSplitWithSentinel(ev, "event_id", "ts",
-          project = _.select(col("key"), col("ts"), col("value")))(sentinel)
-      }
+    StatefulQueries.timeOrderedFilesCopy(spark, s"locf:$sfDir",
+        Seq("l0.parquet", "l1.parquet", "l2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("event_type").as("key"),
+                timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("value"), col("event_id"))
+      def sentinel(afterUs: Long) = spark.range(1).select(
+        lit(SessSentinelKey).as("key"),
+        timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
+        lit(0.0).as("value"))
+      StatefulQueries.medianSplitWithSentinel(ev, "event_id", "ts",
+        project = _.select(col("key"), col("ts"), col("value")))(sentinel)
     }
 }

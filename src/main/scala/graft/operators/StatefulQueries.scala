@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.io.{LocalCheckpointFileManager, Tables}
 import graft.streaming.StatefulOps
 import graft.streaming.StatefulOps.{KSV, KV}
@@ -48,22 +49,12 @@ object StatefulQueries {
       .orderBy(col("event_id"))
   }
 
-  /** The shared scaffold for driving a keyed-state op through the REAL
-    * micro-batch engine — the end-to-end proof that the
-    * flatMapGroupsWithState family works against the state store, not just
-    * in batch execution: readStream file source over the events parquet →
-    * keyed stateful transform → append-mode memory sink, drained
-    * synchronously (Trigger.AvailableNow). Mirrors
-    * [[Sessionize.tumblingHourlyStream]]'s shape, including the state-store
-    * width: every shuffle partition is a state store instance paying
-    * snapshot+commit I/O per micro-batch, so width is sized to the key
-    * cardinality (years / event types — single digits), not the session
-    * default. */
   /** The ONE memory-sink drain scaffold behind every in-gate streaming
     * query: write `out` (a streaming DataFrame) to an append-mode memory
     * sink under a unique name, run to completion (Trigger.AvailableNow),
-    * run `check` against the finished query (e.g. the multi-batch witness),
-    * then materialize the rows and DROP the sink view. The drop happens on
+    * run `check` against the finished query (a witness:
+    * [[requireDataBatches]], [[requireStateBounded]]), then materialize
+    * the rows and DROP the sink view. The drop happens on
     * EVERY path — a failure mid-drain (or a failed check) must not leave
     * the view and its driver-held rows behind, or each bench repetition
     * would leak a full result set. `stateWidth` narrows the shuffle (=
@@ -72,8 +63,7 @@ object StatefulQueries {
   private[graft] def drainToMemory(
       spark: SparkSession, out: DataFrame, stateWidth: Option[Int] = None,
       outputMode: String = "append")(
-      check: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ()): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+      check: StreamingQuery => Unit = _ => ()): DataFrame = {
     val qn = s"stateful_stream_${System.nanoTime()}"
     def run(): DataFrame =
       try {
@@ -86,6 +76,38 @@ object StatefulQueries {
         if (spark.catalog.tableExists(qn)) spark.catalog.dropTempView(qn)
       }
     withDrainConf(spark, stateWidth)(run())
+  }
+
+  /** Witness: the drain ran at least `min` data micro-batches, so its
+    * state really crossed a batch boundary — read from the query's own
+    * progress records. Vacuous (passes) when the query's total input was
+    * at most `vacuousAtRows` rows: an empty corpus, or a replay of only
+    * its sentinel rows, has no cross-batch state to witness. The default
+    * (−1) is never vacuous. */
+  private[graft] def requireDataBatches(q: StreamingQuery, min: Int, what: String,
+                                        vacuousAtRows: Long = -1L): Unit = {
+    val ps = q.recentProgress
+    val dataBatches = ps.count(_.numInputRows > 0)
+    require(ps.map(_.numInputRows).sum <= vacuousAtRows || dataBatches >= min,
+      s"requireDataBatches: expected >= $min data micro-batches, saw $dataBatches — " +
+        s"$what did not exercise cross-batch state")
+  }
+
+  /** Witness: the watermark (or timers) bounded the drain's state —
+    * progress was recorded, rows left the store (unless total input was
+    * at most 1 row: a sentinel alone parks state with nothing to evict),
+    * and at most `maxLeft` rows survive the final batch. Reads state
+    * operator 0, so it is only for plans with ONE state operator. */
+  private[graft] def requireStateBounded(q: StreamingQuery, maxLeft: Long,
+                                         what: String): Unit = {
+    val ps = q.recentProgress
+    val progs = ps.filter(_.stateOperators.nonEmpty)
+    require(progs.nonEmpty, s"requireStateBounded: no state-operator progress recorded ($what)")
+    val removed = progs.map(_.stateOperators(0).numRowsRemoved).sum
+    val left = progs.last.stateOperators(0).numRowsTotal
+    require((removed > 0 || ps.map(_.numInputRows).sum <= 1) && left <= maxLeft,
+      s"requireStateBounded: $what did not bound state: removed=$removed, " +
+        s"left=$left (at most $maxLeft may stay)")
   }
 
   private val ShuffleWidthKey = "spark.sql.shuffle.partitions"
@@ -133,19 +155,18 @@ object StatefulQueries {
     *    restarted from its checkpoint needs its state back, and a stateful
     *    foreachBatch sink's commit validation counts commit reports that
     *    only the engine providers send.
-    * Guards: an EXPLICITLY set provider or checkpoint manager — a caller's
+    * Guard: an EXPLICITLY set provider or checkpoint manager — a caller's
     * pin, the engine default's class name included — wins over the swap,
     * so `withRocksDbStateStore` and the TWS family keep measuring the
-    * production provider; and `spark.graft.drain.stateStoreProvider=engine`
-    * turns the provider swap off globally (production guidance: multi-node
-    * or fault-tolerant jobs, or state larger than heap, keep the
+    * production provider, and pinning `HDFSBackedStateStoreProvider`
+    * keeps the engine default (production guidance: multi-node or
+    * fault-tolerant jobs, or state larger than heap, keep the
     * engine/RocksDB providers — the memory provider cannot reload state
     * after executor loss). */
   private[operators] def withDrainConf[T](spark: SparkSession, width: Option[Int],
                                           keepProvider: Boolean = false)(body: => T): T = {
     val pinned = spark.conf.getAll.keySet
-    val memoryState = !keepProvider && !pinned(ProviderClassKey) &&
-      spark.conf.getOption("spark.graft.drain.stateStoreProvider").forall(_ == "memory")
+    val memoryState = !keepProvider && !pinned(ProviderClassKey)
     val kvs = width.map(w => ShuffleWidthKey -> w.toString).toSeq ++
       Option.when(!pinned(LocalCheckpointFileManager.ConfKey))(
         LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName) ++
@@ -169,21 +190,29 @@ object StatefulQueries {
   private[operators] def withShuffleWidth[T](spark: SparkSession, w: Int)(body: => T): T =
     withConf(spark, ShuffleWidthKey -> w.toString)(body)
 
-  private def drainStateful(spark: SparkSession, sfDir: String)
-                           (op: DataFrame => DataFrame): DataFrame = {
-    // the legacy-nanos flag is restored after the drain like the shuffle
-    // width: streaming config must not bleed into later gate queries
+  /** Drive `op` through the REAL micro-batch engine over the raw `events`
+    * file stream ([[Tables.streamTable]], normalized): readStream → op →
+    * `outputMode` memory sink, drained synchronously at state width 8 —
+    * every shuffle partition is a state store instance paying
+    * snapshot+commit work per micro-batch, so width is sized to the key
+    * cardinality (years / event types / hour buckets), not the session
+    * default. The nanos flag is held while the stream is built and
+    * drained, and restored after, like the width. */
+  private[graft] def drainEvents(spark: SparkSession, sfDir: String,
+                                 outputMode: String = "append")
+                                (op: DataFrame => DataFrame): DataFrame =
     withNanosAsLong(spark) {
       val stream = Tables.normalizeEvents(Tables.streamTable(spark, sfDir, "events"))
-      drainToMemory(spark, op(stream), stateWidth = Some(8))()
+      drainToMemory(spark, op(stream), stateWidth = Some(8), outputMode)()
     }
-  }
 
   /** Run `body` with `spark.sql.legacy.parquet.nanosAsLong=true`, restoring
     * the previous value on every path — the flag changes how ANY
     * int64-nanos parquet column is read, so it must not outlive the scope
-    * that needed it. */
-  private[operators] def withNanosAsLong[T](spark: SparkSession)(body: => T): T =
+    * that needed it. Held only by [[drainEvents]] and
+    * [[timeOrderedFilesCopy]]: the copies themselves carry no nanos
+    * column, so their replays read without it. */
+  private def withNanosAsLong[T](spark: SparkSession)(body: => T): T =
     withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(body)
 
   /** Drain scaffold over the `documents` parquet (layout-adaptive via
@@ -211,7 +240,7 @@ object StatefulQueries {
 
   /** Q1 through the real micro-batch engine, registered under q1's oracle. */
   def runningMaxStreaming(spark: SparkSession, sfDir: String): DataFrame =
-    drainStateful(spark, sfDir) { stream =>
+    drainEvents(spark, sfDir) { stream =>
       StatefulOps.runningMax(stream
         .select(year(col("ts")).cast("string").as("key"),
                 col("event_id").as("ord"), col("value"))
@@ -252,7 +281,7 @@ object StatefulQueries {
   private[graft] def drainSocket(
       spark: SparkSession, chunks: Seq[Seq[String]], expected: Seq[Long])(
       op: DataFrame => DataFrame)(
-      check: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ()): DataFrame =
+      check: StreamingQuery => Unit = _ => ()): DataFrame =
     withDrainConf(spark, Some(8)) {
       require(chunks.length == expected.length && expected == expected.sorted,
         "expected must give a cumulative sink row count per chunk")
@@ -357,7 +386,6 @@ object StatefulQueries {
     * without recomputing or corrupting keyed state. */
   def blockAvgCheckpointed(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.streaming.Trigger
     val copyDir = orderedEventsCopy(spark, sfDir)
     val work = Files.createTempDirectory("graft-q2c-")
     val srcDir = Files.createDirectory(work.resolve("src"))
@@ -408,13 +436,13 @@ object StatefulQueries {
   /** Write `frames` as single parquet files named `names`, with modification
     * times 60s apart, so a `maxFilesPerTrigger(1)` file stream replays them
     * as time-ordered micro-batches (the file source lists pending files
-    * oldest-mtime-first). Cached per `cacheKey`; the caller is responsible
-    * for holding any session conf the frames' execution needs (e.g.
-    * [[withNanosAsLong]]) around the CALL, since the writes run inside. */
-  private[operators] def timeOrderedFilesCopy(
+    * oldest-mtime-first). Cached per `cacheKey`. The writes run under the
+    * nanos flag ([[withNanosAsLong]]), which `Tables.events` frames need
+    * at execution; a cache hit sets nothing. */
+  private[graft] def timeOrderedFilesCopy(
       spark: SparkSession, cacheKey: String, names: Seq[String])
       (frames: => Seq[DataFrame]): String =
-    copyCache.computeIfAbsent(cacheKey, { _ =>
+    copyCache.computeIfAbsent(cacheKey, _ => withNanosAsLong(spark) {
       import java.nio.file.Files
       val fs = frames
       // the thunk may return FEWER frames than names (it sees the data and
@@ -441,34 +469,44 @@ object StatefulQueries {
       dir.toString
     })
 
-  /** The shared VERSIONED-REPLAY JOURNAL recipe (held ONCE — r18 review:
-    * the dedup-snapshot and IVF-append builders had copied it and already
-    * drifted on shuffle width): replay `frames` as one-file micro-batches
-    * through the real engine (AvailableNow, maxFilesPerTrigger=1) and hand
-    * each batch to `perBatch`, which must write idempotently to
-    * `v=<batchId>` merging only against versions BELOW its id (the SCD2
-    * convention — a replayed batch then converges instead of
-    * double-appending). Requires at least `minBatches` data micro-batches,
-    * so a collapsed replay fails loudly. */
-  private[operators] def versionedReplayJournal(
-      spark: SparkSession, copyTag: String, names: Seq[String],
-      frames: => Seq[DataFrame], minBatches: Int)
-      (perBatch: (DataFrame, Long) => Unit): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val dir = timeOrderedFilesCopy(spark, copyTag, names)(frames)
-    val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
+  /** The one-file-per-trigger replay source over a [[timeOrderedFilesCopy]]
+    * dir: schema pinned from a batch read (file streams need one) and
+    * `maxFilesPerTrigger` = 1, so each file is its own micro-batch
+    * (Trigger.AvailableNow honors the read limit). */
+  private[graft] def replayStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
+
+  /** The one foreachBatch drain: replay `dir` ([[replayStream]]) through
+    * the real engine (AvailableNow) and hand each micro-batch and its id to
+    * `perBatch`. Requires at least `minBatches` data micro-batches, so a
+    * collapsed replay fails loudly. */
+  private[operators] def replayForeachBatch(spark: SparkSession, dir: String, minBatches: Int)
+                                           (perBatch: (DataFrame, Long) => Unit): Unit = {
+    val stream = replayStream(spark, dir)
     withDrainConf(spark, Some(8)) {
       val q = stream.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, id: Long) => perBatch(b, id) }
         .start()
       q.awaitTermination()
-      require(q.recentProgress.count(_.numInputRows > 0) >= minBatches,
-        s"the $minBatches-increment replay did not produce " +
-          s"$minBatches data micro-batches")
+      requireDataBatches(q, minBatches, s"the $minBatches-file foreachBatch replay")
     }
   }
+
+  /** The shared VERSIONED-REPLAY JOURNAL recipe (held ONCE — r18 review:
+    * the dedup-snapshot and IVF-append builders had copied it and already
+    * drifted on shuffle width): replay `frames` as one-file micro-batches
+    * through [[replayForeachBatch]] and hand each batch to `perBatch`,
+    * which must write idempotently to `v=<batchId>` merging only against
+    * versions BELOW its id (the SCD2 convention — a replayed batch then
+    * converges instead of double-appending). */
+  private[operators] def versionedReplayJournal(
+      spark: SparkSession, copyTag: String, names: Seq[String],
+      frames: => Seq[DataFrame], minBatches: Int)
+      (perBatch: (DataFrame, Long) => Unit): Unit =
+    replayForeachBatch(spark, timeOrderedFilesCopy(spark, copyTag, names)(frames),
+      minBatches)(perBatch)
 
   /** Median-time split + far-future sentinel: the replay shape of every
     * watermark-driven drain, held ONCE (session windows, TTL dedup — a fix
@@ -956,7 +994,7 @@ object StatefulQueries {
   }
 
   /** Number of replay files actually produced into a copy dir. */
-  private def replayFileCount(dir: String): Int = {
+  private[operators] def replayFileCount(dir: String): Int = {
     val l = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
     try l.count().toInt finally l.close()
   }
@@ -965,11 +1003,9 @@ object StatefulQueries {
     import graft.streaming.StatefulOps
     implicit val tEnc: Encoder[StatefulOps.TransEv] =
       Encoders.product[StatefulOps.TransEv]
-    val copyDir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"markov:$sfDir", Seq("m0.parquet", "m1.parquet")) {
-        medianIdSplit(Tables.events(spark, sfDir)
-          .select(col("user_id"), col("event_id"), col("event_type")))
-      }
+    val copyDir = timeOrderedFilesCopy(spark, s"markov:$sfDir", Seq("m0.parquet", "m1.parquet")) {
+      medianIdSplit(Tables.events(spark, sfDir)
+        .select(col("user_id"), col("event_id"), col("event_type")))
     }
     val trans = drainOrderedFiles(spark, copyDir,
         minBatches = replayFileCount(copyDir)) { stream =>
@@ -1002,13 +1038,11 @@ object StatefulQueries {
     import graft.streaming.StatefulOps
     implicit val aEnc: Encoder[StatefulOps.AttrEv] =
       Encoders.product[StatefulOps.AttrEv]
-    val copyDir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"attr:$sfDir", Seq("a0.parquet", "a1.parquet")) {
-        medianIdSplit(Tables.events(spark, sfDir)
-          .filter(col("event_type").isin("view", "purchase"))
-          .select(col("user_id"), col("event_id"),
-                  expr("ts_ns div 1000").as("us"), col("event_type")))
-      }
+    val copyDir = timeOrderedFilesCopy(spark, s"attr:$sfDir", Seq("a0.parquet", "a1.parquet")) {
+      medianIdSplit(Tables.events(spark, sfDir)
+        .filter(col("event_type").isin("view", "purchase"))
+        .select(col("user_id"), col("event_id"),
+                expr("ts_ns div 1000").as("us"), col("event_type")))
     }
     val lookbackUs = lookbackHours.toLong * 3600L * 1000000L
     drainOrderedFiles(spark, copyDir,
@@ -1034,13 +1068,11 @@ object StatefulQueries {
     import graft.streaming.StatefulOps
     implicit val aEnc: Encoder[StatefulOps.AttrEv] =
       Encoders.product[StatefulOps.AttrEv]
-    val copyDir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"cep:$sfDir", Seq("c0.parquet", "c1.parquet")) {
-        medianIdSplit(Tables.events(spark, sfDir)
-          .filter(col("event_type").isin("view", "purchase", "error"))
-          .select(col("user_id"), col("event_id"),
-                  expr("ts_ns div 1000").as("us"), col("event_type")))
-      }
+    val copyDir = timeOrderedFilesCopy(spark, s"cep:$sfDir", Seq("c0.parquet", "c1.parquet")) {
+      medianIdSplit(Tables.events(spark, sfDir)
+        .filter(col("event_type").isin("view", "purchase", "error"))
+        .select(col("user_id"), col("event_id"),
+                expr("ts_ns div 1000").as("us"), col("event_type")))
     }
     val withinUs = withinHours.toLong * 3600L * 1000000L
     drainOrderedFiles(spark, copyDir,
@@ -1065,13 +1097,11 @@ object StatefulQueries {
     import graft.streaming.StatefulOps
     implicit val aEnc: Encoder[StatefulOps.AttrEv] =
       Encoders.product[StatefulOps.AttrEv]
-    val copyDir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"cepnext:$sfDir",
-          Seq("n0.parquet", "n1.parquet")) {
-        medianIdSplit(Tables.events(spark, sfDir)
-          .select(col("user_id"), col("event_id"),
-                  expr("ts_ns div 1000").as("us"), col("event_type")))
-      }
+    val copyDir = timeOrderedFilesCopy(spark, s"cepnext:$sfDir",
+        Seq("n0.parquet", "n1.parquet")) {
+      medianIdSplit(Tables.events(spark, sfDir)
+        .select(col("user_id"), col("event_id"),
+                expr("ts_ns div 1000").as("us"), col("event_type")))
     }
     val withinUs = withinHours.toLong * 3600L * 1000000L
     drainOrderedFiles(spark, copyDir,
@@ -1102,14 +1132,12 @@ object StatefulQueries {
     import graft.streaming.StatefulOps
     implicit val aEnc: Encoder[StatefulOps.AttrEv] =
       Encoders.product[StatefulOps.AttrEv]
-    val copyDir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"ceptimes:$sfDir",
-          Seq("t0.parquet", "t1.parquet")) {
-        medianIdSplit(Tables.events(spark, sfDir)
-          .filter(col("event_type").isin("view", "purchase"))
-          .select(col("user_id"), col("event_id"),
-                  expr("ts_ns div 1000").as("us"), col("event_type")))
-      }
+    val copyDir = timeOrderedFilesCopy(spark, s"ceptimes:$sfDir",
+        Seq("t0.parquet", "t1.parquet")) {
+      medianIdSplit(Tables.events(spark, sfDir)
+        .filter(col("event_type").isin("view", "purchase"))
+        .select(col("user_id"), col("event_id"),
+                expr("ts_ns div 1000").as("us"), col("event_type")))
     }
     val winUs = windowMinutes.toLong * 60L * 1000000L
     val followUs = followHours.toLong * 3600L * 1000000L
@@ -1140,25 +1168,21 @@ object StatefulQueries {
     implicit val enc: Encoder[StatefulOps.CepTimedEv] =
       Encoders.product[StatefulOps.CepTimedEv]
     val withinUs = withinHours.toLong * 3600L * 1000000L
-    val dir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"cepabs:$sfDir",
-          Seq("a0.parquet", "a1.parquet", "a2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .filter(col("event_type").isin("view", "purchase"))
-          .select(col("user_id").as("key"), col("event_id").as("ord"),
-                  timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-                  col("event_type").as("typ"))
-        medianSplitWithSentinel(ev, "ord", "ts") { afterUs =>
-          spark.range(1).select(
-            lit(-1L).as("key"), lit(-1L).as("ord"),
-            timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
-            lit("purchase").as("typ"))
-        }
+    val dir = timeOrderedFilesCopy(spark, s"cepabs:$sfDir",
+        Seq("a0.parquet", "a1.parquet", "a2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .filter(col("event_type").isin("view", "purchase"))
+        .select(col("user_id").as("key"), col("event_id").as("ord"),
+                timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+                col("event_type").as("typ"))
+      medianSplitWithSentinel(ev, "ord", "ts") { afterUs =>
+        spark.range(1).select(
+          lit(-1L).as("key"), lit(-1L).as("ord"),
+          timestamp_micros(lit(afterUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
+          lit("purchase").as("typ"))
       }
     }
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val stream = replayStream(spark, dir)
       .withWatermark("ts", "0 seconds")
       .as[StatefulOps.CepTimedEv]
     drainToMemory(spark,
@@ -1166,11 +1190,8 @@ object StatefulQueries {
         stateWidth = Some(8)) { q =>
       val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
       require(progs.nonEmpty, "no state-operator progress recorded")
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      val totalRows = q.recentProgress.map(_.numInputRows).sum
       // the sentinel alone is one data batch; real data must cross batches
-      require(totalRows <= 1 || dataBatches >= 2,
-        s"expected >= 2 data micro-batches, saw $dataBatches")
+      requireDataBatches(q, 2, "the CEP absence replay", vacuousAtRows = 1)
       // the timer witness: the final (timer-firing) batch must leave the
       // store EMPTY — every pending view's deadline fired off the
       // sentinel-advanced watermark, and the sentinel itself parked nothing
@@ -1193,12 +1214,11 @@ object StatefulQueries {
     import graft.streaming.StatefulOps
     implicit val lEnc: Encoder[StatefulOps.LeadEv] =
       Encoders.product[StatefulOps.LeadEv]
-    val copyDir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"events-usv:$sfDir", Seq("t0.parquet", "t1.parquet")) {
-        medianIdSplit(Tables.events(spark, sfDir)
-          .select(col("event_type"), col("event_id"),
-                  expr("ts_ns div 1000").as("us"), col("value")))
-      }
+    val copyDir = timeOrderedFilesCopy(spark, s"events-usv:$sfDir",
+        Seq("t0.parquet", "t1.parquet")) {
+      medianIdSplit(Tables.events(spark, sfDir)
+        .select(col("event_type"), col("event_id"),
+                expr("ts_ns div 1000").as("us"), col("value")))
     }
     val ivs = drainOrderedFiles(spark, copyDir,
         minBatches = replayFileCount(copyDir)) { stream =>
@@ -1222,16 +1242,11 @@ object StatefulQueries {
     * contract the reference ops require. Only (event_type, event_id, value)
     * is kept. */
   private def orderedEventsCopy(spark: SparkSession, sfDir: String): String =
-    // Tables.events needs the nanos flag during the writes; withNanosAsLong
-    // keeps it from outliving the copy creation (cache hits pay a no-op
-    // set/restore)
-    withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"events:$sfDir", Seq("ev0.parquet", "ev1.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("event_type"), col("event_id"), col("value"))
-        val mid = ev.agg(max(col("event_id"))).head().getLong(0) / 2
-        Seq(ev.filter(col("event_id") <= mid), ev.filter(col("event_id") > mid))
-      }
+    timeOrderedFilesCopy(spark, s"events:$sfDir", Seq("ev0.parquet", "ev1.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("event_type"), col("event_id"), col("value"))
+      val mid = ev.agg(max(col("event_id"))).head().getLong(0) / 2
+      Seq(ev.filter(col("event_id") <= mid), ev.filter(col("event_id") > mid))
     }
 
   /** Drain a keyed-state op over a directory of time-ordered parquet files,
@@ -1240,27 +1255,19 @@ object StatefulQueries {
     * `minBatches` batches — the witness that state crossed a batch
     * boundary, asserted from the query's own progress records. */
   private[operators] def drainOrderedFiles(spark: SparkSession, dir: String, minBatches: Int)
-                                          (op: DataFrame => DataFrame): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    drainToMemory(spark, op(stream), stateWidth = Some(8)) { q =>
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      val totalRows = q.recentProgress.map(_.numInputRows).sum
+                                          (op: DataFrame => DataFrame): DataFrame =
+    drainToMemory(spark, op(replayStream(spark, dir)), stateWidth = Some(8)) { q =>
       // a genuinely empty corpus replays zero data batches and has no
       // cross-batch state to witness — only a NON-empty replay that failed
       // to span batches is a broken witness
-      require(totalRows == 0 || dataBatches >= minBatches,
-        s"expected >= $minBatches data micro-batches, saw $dataBatches — " +
-          "the multi-file replay did not exercise cross-batch state")
+      requireDataBatches(q, minBatches, "the multi-file replay", vacuousAtRows = 0)
     }
-  }
 
   /** Q3 through the real micro-batch engine, registered under q3's oracle —
     * the MapState shape (month subkey map inside the year's state) against
     * the state store. */
   def runningMaxMonthStreaming(spark: SparkSession, sfDir: String): DataFrame =
-    drainStateful(spark, sfDir) { stream =>
+    drainEvents(spark, sfDir) { stream =>
       StatefulOps.runningMaxBySubkey(stream
         .select(year(col("ts")).cast("string").as("key"),
                 month(col("ts")).cast("string").as("subkey"),
@@ -1275,7 +1282,7 @@ object StatefulQueries {
     * the ListState-size shape (sub-threshold counter) against the state
     * store. */
   def thresholdGapsStreaming(spark: SparkSession, sfDir: String): DataFrame =
-    drainStateful(spark, sfDir) { stream =>
+    drainEvents(spark, sfDir) { stream =>
       StatefulOps.thresholdGaps(stream
         .select(col("event_type").as("key"), col("event_id").as("ord"), col("value"))
         .as[KV](kvEnc), 100.0).toDF()
@@ -1526,33 +1533,31 @@ object StatefulQueries {
     * EVICTION, not at end-of-input — all flush before the drain stops; the
     * inner join ignores it. One day past max ts dwarfs window + delay. */
   private def userEventsCopy(spark: SparkSession, sfDir: String): String =
-    withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"events-uid:$sfDir",
-          Seq("ev0.parquet", "ev1.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("user_id"), col("event_id"), col("ts"))
-        val bounds = ev.agg(max(col("event_id")), max(unix_micros(col("ts")))).head()
-        // empty corpus: flush-only replay — one sentinel file, off epoch 0
-        // (a row AT the initial watermark would be dropped as late)
-        val (maxId, maxUs) =
-          if (bounds.isNullAt(0)) (0L, 0L)
-          else (bounds.getLong(0), bounds.getLong(1))
-        val sentinel = ev.sparkSession.range(1).select(
-          lit(-1L).as("user_id"), lit(maxId + 1).as("event_id"),
-          timestamp_micros(lit(maxUs + 86400L * 1000000L)).as("ts"))
-        if (bounds.isNullAt(0)) Seq(sentinel)
-        else {
-          // TWO files, sentinel riding in the second: watermarks only
-          // advance BETWEEN batches, so the sentinel needs no batch of its
-          // own — after batch 2 the watermark jumps past every real row and
-          // the trailing no-data batch does the eviction / outer-emission
-          // flush. One fewer micro-batch per drain (each batch pays
-          // 4 state-store commits x width on BOTH join sides), with the
-          // cross-batch and eviction witnesses unchanged.
-          val mid = maxId / 2
-          Seq(ev.filter(col("event_id") <= mid),
-              ev.filter(col("event_id") > mid).unionAll(sentinel))
-        }
+    timeOrderedFilesCopy(spark, s"events-uid:$sfDir",
+        Seq("ev0.parquet", "ev1.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("user_id"), col("event_id"), col("ts"))
+      val bounds = ev.agg(max(col("event_id")), max(unix_micros(col("ts")))).head()
+      // empty corpus: flush-only replay — one sentinel file, off epoch 0
+      // (a row AT the initial watermark would be dropped as late)
+      val (maxId, maxUs) =
+        if (bounds.isNullAt(0)) (0L, 0L)
+        else (bounds.getLong(0), bounds.getLong(1))
+      val sentinel = ev.sparkSession.range(1).select(
+        lit(-1L).as("user_id"), lit(maxId + 1).as("event_id"),
+        timestamp_micros(lit(maxUs + 86400L * 1000000L)).as("ts"))
+      if (bounds.isNullAt(0)) Seq(sentinel)
+      else {
+        // TWO files, sentinel riding in the second: watermarks only
+        // advance BETWEEN batches, so the sentinel needs no batch of its
+        // own — after batch 2 the watermark jumps past every real row and
+        // the trailing no-data batch does the eviction / outer-emission
+        // flush. One fewer micro-batch per drain (each batch pays
+        // 4 state-store commits x width on BOTH join sides), with the
+        // cross-batch and eviction witnesses unchanged.
+        val mid = maxId / 2
+        Seq(ev.filter(col("event_id") <= mid),
+            ev.filter(col("event_id") > mid).unionAll(sentinel))
       }
     }
 
@@ -1644,41 +1649,41 @@ object StatefulQueries {
     * operators evicting. This is the engine-surface composition the
     * registry lacked: stateful dedup FEEDING a stateful windowed
     * aggregate in one append-mode plan. */
-  def dauDailyClosedStreaming(spark: SparkSession, sfDir: String): DataFrame =
-    withNanosAsLong(spark) {
-      val dir = timeOrderedFilesCopy(spark, s"dauclosed:$sfDir",
-          Seq("d0.parquet", "d1.parquet", "d2.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .filter(col("user_id").isNotNull)
-          .select(col("event_id"), col("user_id"),
-                  timestamp_micros(expr("ts_ns div 1000")).as("ts"))
-        def sentinel(maxUs: Long) = ev.sparkSession.range(1).select(
-          lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-          timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000L)).as("ts"))
-        medianSplitWithSentinel(ev, "event_id", "ts")(sentinel)
-      }
-      val schema = spark.read.parquet(dir).schema
-      val agg = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-        .withWatermark("ts", "25 hours")
-        .withColumn("day", expr("unix_micros(ts) div 86400000000"))
-        .dropDuplicatesWithinWatermark("user_id", "day")
-        .groupBy(window(col("ts"), "1 day"))
-        .agg(count(lit(1)).as("n_users"))
-      drainToMemory(spark, agg, stateWidth = Some(8)) { q =>
-        val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
-        require(progs.nonEmpty, "no state-operator progress recorded")
-        val removed = progs.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
-        val left = progs.last.stateOperators.map(_.numRowsTotal).sum
-        val totalRows = q.recentProgress.map(_.numInputRows).sum
-        // at most the sentinel's dedup key + its open window survive
-        require((removed > 0 || totalRows <= 1) && left <= 2,
-          s"dedup+window state not watermark-bounded: removed=$removed, left=$left")
-      }
-        .select(expr("unix_micros(window.start) div 86400000000").as("day"),
-                col("n_users").cast("long").as("n_users"))
-        .orderBy(col("day"))
+  def dauDailyClosedStreaming(spark: SparkSession, sfDir: String): DataFrame = {
+    val dir = timeOrderedFilesCopy(spark, s"dauclosed:$sfDir",
+        Seq("d0.parquet", "d1.parquet", "d2.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .filter(col("user_id").isNotNull)
+        .select(col("event_id"), col("user_id"),
+                timestamp_micros(expr("ts_ns div 1000")).as("ts"))
+      def sentinel(maxUs: Long) = ev.sparkSession.range(1).select(
+        lit(-1L).as("event_id"), lit(-1L).as("user_id"),
+        timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000L)).as("ts"))
+      medianSplitWithSentinel(ev, "event_id", "ts")(sentinel)
     }
+    val agg = replayStream(spark, dir)
+      .withWatermark("ts", "25 hours")
+      .withColumn("day", expr("unix_micros(ts) div 86400000000"))
+      .dropDuplicatesWithinWatermark("user_id", "day")
+      .groupBy(window(col("ts"), "1 day"))
+      .agg(count(lit(1)).as("n_users"))
+    drainToMemory(spark, agg, stateWidth = Some(8)) { q =>
+      // TWO state operators (dedup + window), so not requireStateBounded's
+      // operator-0 read: removal and the final size sum over both
+      val ps = q.recentProgress
+      val progs = ps.filter(_.stateOperators.nonEmpty)
+      require(progs.nonEmpty, "no state-operator progress recorded")
+      val removed = progs.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
+      val left = progs.last.stateOperators.map(_.numRowsTotal).sum
+      val totalRows = ps.map(_.numInputRows).sum
+      // at most the sentinel's dedup key + its open window survive
+      require((removed > 0 || totalRows <= 1) && left <= 2,
+        s"dedup+window state not watermark-bounded: removed=$removed, left=$left")
+    }
+      .select(expr("unix_micros(window.start) div 86400000000").as("day"),
+              col("n_users").cast("long").as("n_users"))
+      .orderBy(col("day"))
+  }
 
   /** Q6 as a STREAM-STATIC join with a COMPLETE-mode streaming aggregation,
     * registered under q6's oracle — the two engine surfaces the other
@@ -1711,9 +1716,7 @@ object StatefulQueries {
       val mid = li.agg(max(col("l_orderkey"))).head().getLong(0) / 2
       Seq(li.filter(col("l_orderkey") <= mid), li.filter(col("l_orderkey") > mid))
     }
-    val schema = spark.read.parquet(dir).schema
-    val li = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val li = replayStream(spark, dir)
     val o = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_custkey"))
     val c = Tables.customer(spark, sfDir).select(col("c_custkey"), col("c_nationkey"))
     val n = Tables.nation(spark, sfDir).select(col("n_nationkey"), col("n_name"))
@@ -1727,12 +1730,8 @@ object StatefulQueries {
         .groupBy(col("n_name"))
         .agg(Relational.discRevenueSum.cast("double").as("revenue"),
              count(lit(1)).as("n_lineitems"))
-      drainToMemory(spark, agg, stateWidth = Some(8), outputMode = "complete") { q =>
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        val totalRows = q.recentProgress.map(_.numInputRows).sum
-        require(totalRows == 0 || dataBatches >= 2,
-          s"expected >= 2 data micro-batches, saw $dataBatches — " +
-            "the complete-mode aggregation did not accumulate across batches")
+      drainToMemory(spark, agg, stateWidth = Some(8), outputMode = "complete") {
+        requireDataBatches(_, 2, "the complete-mode aggregation", vacuousAtRows = 0)
       }.orderBy(col("n_name"))
     } finally dims.unpersist()
   }
@@ -1755,7 +1754,6 @@ object StatefulQueries {
     * split (30.00 view/purchase, 60.00 elsewhere) — probed
     * discriminating at all three SFs (v0≠v1 flag rates everywhere). */
   def dynamicRulesStreaming(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val rulesDir =
       java.nio.file.Files.createTempDirectory("graft-rules-").toString
     val outDir =
@@ -1769,13 +1767,11 @@ object StatefulQueries {
           (t, if (t == "view" || t == "purchase") 3000L else 6000L))
         .toDF("event_type", "thr_cents")
         .write.parquet(s"$rulesDir/v=1")
-      val copyDir = withNanosAsLong(spark) {
-        timeOrderedFilesCopy(spark, s"rules:$sfDir",
-            Seq("r0.parquet", "r1.parquet")) {
-          medianIdSplit(Tables.events(spark, sfDir)
-            .select(col("event_type"), col("event_id"),
-                    expr("cast(round(value * 100) as bigint)").as("c")))
-        }
+      val copyDir = timeOrderedFilesCopy(spark, s"rules:$sfDir",
+          Seq("r0.parquet", "r1.parquet")) {
+        medianIdSplit(Tables.events(spark, sfDir)
+          .select(col("event_type"), col("event_id"),
+                  expr("cast(round(value * 100) as bigint)").as("c")))
       }
       val nFiles = replayFileCount(copyDir)
       // the reload boundary (batch index → rule version) is stated in the
@@ -1785,29 +1781,17 @@ object StatefulQueries {
       require(nFiles == 2,
         s"dynamic-rules replay needs rows on both sides of max(event_id)/2 " +
         s"(got $nFiles file(s)) — the reload boundary and its oracle are defined by that split")
-      val stream = spark.readStream
-        .schema(spark.read.parquet(copyDir).schema)
-        .option("maxFilesPerTrigger", "1").parquet(copyDir)
-      withDrainConf(spark, Some(8)) {
-        val q = stream.writeStream.outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            val v = math.min(id, 1L) // the version in force for this batch
-            // poll the config store AT BATCH START — the reload point
-            val rules = spark.read.parquet(s"$rulesDir/v=$v")
-            b.join(broadcast(rules), Seq("event_type"))
-              .groupBy(col("event_type"))
-              .agg(count(when(col("c") >= col("thr_cents"), 1))
-                     .as("n_flagged"),
-                   count(lit(1)).as("n_events"))
-              .withColumn("rule_version", lit(v))
-              .write.mode("overwrite").parquet(s"$outDir/b=$id")
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(q.recentProgress.count(_.numInputRows > 0) >= nFiles,
-          s"the $nFiles-file replay did not produce $nFiles data batches")
+      replayForeachBatch(spark, copyDir, nFiles) { (b, id) =>
+        val v = math.min(id, 1L) // the version in force for this batch
+        // poll the config store AT BATCH START — the reload point
+        val rules = spark.read.parquet(s"$rulesDir/v=$v")
+        b.join(broadcast(rules), Seq("event_type"))
+          .groupBy(col("event_type"))
+          .agg(count(when(col("c") >= col("thr_cents"), 1))
+                 .as("n_flagged"),
+               count(lit(1)).as("n_events"))
+          .withColumn("rule_version", lit(v))
+          .write.mode("overwrite").parquet(s"$outDir/b=$id")
       }
       spark.read.parquet(outDir)
         .groupBy(col("rule_version"), col("event_type"))
@@ -1846,14 +1830,12 @@ object StatefulQueries {
       .persist()
     dim.count() // materialize BEFORE the drain; batches hit cached blocks
     try {
-      val copyDir = withNanosAsLong(spark) {
-        timeOrderedFilesCopy(spark, s"tempjoin:$sfDir",
-            Seq("p0.parquet", "p1.parquet")) {
-          medianIdSplit(Tables.events(spark, sfDir)
-            .filter(col("event_type") === "purchase")
-            .select(col("user_id"), col("event_id"),
-                    expr("ts_ns div 1000").as("us")))
-        }
+      val copyDir = timeOrderedFilesCopy(spark, s"tempjoin:$sfDir",
+          Seq("p0.parquet", "p1.parquet")) {
+        medianIdSplit(Tables.events(spark, sfDir)
+          .filter(col("event_type") === "purchase")
+          .select(col("user_id"), col("event_id"),
+                  expr("ts_ns div 1000").as("us")))
       }
       drainOrderedFiles(spark, copyDir,
           minBatches = replayFileCount(copyDir)) { stream =>
@@ -1875,10 +1857,8 @@ object StatefulQueries {
   private def drainPairJoin(spark: SparkSession, sfDir: String,
                             gapMinutes: Int, joinType: String): DataFrame = {
     val dir = userEventsCopy(spark, sfDir)
-    val schema = spark.read.parquet(dir).schema
     def side(tag: String): DataFrame =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
+      replayStream(spark, dir)
         .select(col("user_id").as(s"user_$tag"), col("event_id").as(s"id_$tag"),
                 col("ts").as(s"ts_$tag"))
         // 1s delay (not 0): the file split is on event_id, so a ts TIE can
@@ -1904,24 +1884,22 @@ object StatefulQueries {
     // probe/put parallelism (SCALING.md).
     def drain(): DataFrame =
       drainToMemory(spark, pairs, stateWidth = Some(4)) { q =>
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        val totalRows = q.recentProgress.map(_.numInputRows).sum
         // an empty corpus replays ONLY the sentinel row (once per side —
         // totalRows <= 2): a flush-only run with no cross-batch state or
         // eviction to witness, so the requires apply to real data only
-        require(totalRows <= 2 || dataBatches >= 2,
-          s"expected >= 2 data micro-batches, saw $dataBatches — " +
-            "the stream-stream join did not exercise cross-batch state")
-        val removed = q.recentProgress
-          .flatMap(_.stateOperators).map(_.numRowsRemoved).sum
+        requireDataBatches(q, 2, "the stream-stream join", vacuousAtRows = 2)
+        // four state stores per side, and full outer's eviction needs its
+        // own shrink read: not requireStateBounded's operator-0 form
+        val ps = q.recentProgress
+        val totalRows = ps.map(_.numInputRows).sum
+        val removed = ps.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
         // FULL OUTER evicts through the padding-emission path without
         // ticking numRowsRemoved (probed: state total 1003 → 2 across the
         // finalize batch with removed=0, where left_outer ticks 499+500 on
         // the identical replay) — witness ITS eviction as observed state
         // shrink, peak row count strictly above the final batch's; every
         // other join type keeps the strong removal-metric witness.
-        val totals = q.recentProgress
-          .flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
+        val totals = ps.flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
         val shrank = totals.nonEmpty && totals.last < totals.max
         require(totalRows <= 2 || removed > 0 ||
             (joinType == "full_outer" && shrank),
@@ -2025,18 +2003,15 @@ object StatefulQueries {
     * as the frozen form; the journal re-read is the config-poll cost,
     * amortized per micro-batch, never per row. */
   def temporalJoinUpdatingDim(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val (journalDir, nVersions) = scd2Journal(spark, sfDir)
     require(nVersions == 2,
       s"the updating-dim probe needs two journal versions (got $nVersions)")
-    val copyDir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"tempjoinup:$sfDir",
-          Seq("p0.parquet", "p1.parquet")) {
-        medianIdSplit(Tables.events(spark, sfDir)
-          .filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id"),
-                  expr("ts_ns div 1000").as("us")))
-      }
+    val copyDir = timeOrderedFilesCopy(spark, s"tempjoinup:$sfDir",
+        Seq("p0.parquet", "p1.parquet")) {
+      medianIdSplit(Tables.events(spark, sfDir)
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id"),
+                expr("ts_ns div 1000").as("us")))
     }
     val nFiles = replayFileCount(copyDir)
     // the batch→version map below is stated in the oracle as the
@@ -2049,34 +2024,22 @@ object StatefulQueries {
     val outDir =
       java.nio.file.Files.createTempDirectory("graft-tempjoin-journal-").toString
     try {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(copyDir).schema)
-        .option("maxFilesPerTrigger", "1").parquet(copyDir)
-      withDrainConf(spark, Some(8)) {
-        val q = stream.writeStream.outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            val v = math.min(id, 1L)
-            // poll the dimension journal AT BATCH START — the version in
-            // force at this batch's processing point
-            val dim = scd2VersionBefore(spark, journalDir, v + 1)
-              .getOrElse(sys.error(s"no SCD2 journal version below ${v + 1}"))
-              .select(col("user_id").as("d_user"),
-                      col("value").as("as_of_value"),
-                      col("valid_from_us"), col("valid_to_us"))
-            b.join(dim,
-                col("user_id") === col("d_user") &&
-                  col("valid_from_us") < col("us") &&
-                  (col("valid_to_us").isNull || col("valid_to_us") >= col("us")))
-              .select(col("user_id"), col("event_id"), col("us"),
-                      lit(v).as("dim_version"), col("as_of_value"))
-              .write.mode("overwrite").parquet(s"$outDir/b=$id")
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(q.recentProgress.count(_.numInputRows > 0) >= nFiles,
-          s"the $nFiles-file replay did not produce $nFiles data batches")
+      replayForeachBatch(spark, copyDir, nFiles) { (b, id) =>
+        val v = math.min(id, 1L)
+        // poll the dimension journal AT BATCH START — the version in
+        // force at this batch's processing point
+        val dim = scd2VersionBefore(spark, journalDir, v + 1)
+          .getOrElse(sys.error(s"no SCD2 journal version below ${v + 1}"))
+          .select(col("user_id").as("d_user"),
+                  col("value").as("as_of_value"),
+                  col("valid_from_us"), col("valid_to_us"))
+        b.join(dim,
+            col("user_id") === col("d_user") &&
+              col("valid_from_us") < col("us") &&
+              (col("valid_to_us").isNull || col("valid_to_us") >= col("us")))
+          .select(col("user_id"), col("event_id"), col("us"),
+                  lit(v).as("dim_version"), col("as_of_value"))
+          .write.mode("overwrite").parquet(s"$outDir/b=$id")
       }
       spark.read.parquet(outDir)
         .select(col("user_id"), col("event_id"), col("us"),
@@ -2146,13 +2109,10 @@ object StatefulQueries {
     * assume two. The CALLER owns `outDir` and must delete it. */
   private def buildScd2Journal(spark: SparkSession, sfDir: String,
                                outDir: String): Int = {
-    import org.apache.spark.sql.streaming.Trigger
-    val dir = withNanosAsLong(spark) {
-      timeOrderedFilesCopy(spark, s"scd2up:$sfDir", Seq("u0.parquet", "u1.parquet")) {
-        medianIdSplit(Tables.events(spark, sfDir)
-          .select(col("user_id"), col("event_id"), col("value"),
-                  expr("ts_ns div 1000").as("us")))
-      }
+    val dir = timeOrderedFilesCopy(spark, s"scd2up:$sfDir", Seq("u0.parquet", "u1.parquet")) {
+      medianIdSplit(Tables.events(spark, sfDir)
+        .select(col("user_id"), col("event_id"), col("value"),
+                expr("ts_ns div 1000").as("us")))
     }
     val nFiles = replayFileCount(dir)
     // the journal's batch structure is LOAD-BEARING for the bitemporal
@@ -2164,19 +2124,7 @@ object StatefulQueries {
     require(nFiles == 2,
       s"SCD2 MERGE journal needs rows on both sides of max(event_id)/2 " +
       s"(got $nFiles replay file(s)) — the bitemporal oracle is stated on that split")
-    val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    withDrainConf(spark, Some(8)) {
-      val q = stream.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyScd2Batch(spark, outDir, b, id)
-        }
-        .start()
-      q.awaitTermination()
-      require(q.recentProgress.count(_.numInputRows > 0) >= nFiles,
-        s"the $nFiles-file replay did not produce $nFiles data micro-batches")
-    }
+    replayForeachBatch(spark, dir, nFiles)(applyScd2Batch(spark, outDir, _, _))
     nFiles
   }
 

@@ -29,16 +29,14 @@ object TwsQueries {
   /** `events` as TWO time-ordered parquet files carrying every column the
     * four TWS forms key on. */
   private def orderedEventsWideCopy(spark: SparkSession, sfDir: String): String =
-    StatefulQueries.withNanosAsLong(spark) {
-      StatefulQueries.timeOrderedFilesCopy(spark, s"events-wide:$sfDir",
-          Seq("ev0.parquet", "ev1.parquet")) {
-        val ev = Tables.events(spark, sfDir)
-          .select(col("event_type"), col("event_id"), col("value"),
-                  year(col("ts")).cast("string").as("yr"),
-                  month(col("ts")).cast("string").as("mon"))
-        val mid = ev.agg(max(col("event_id"))).head().getLong(0) / 2
-        Seq(ev.filter(col("event_id") <= mid), ev.filter(col("event_id") > mid))
-      }
+    StatefulQueries.timeOrderedFilesCopy(spark, s"events-wide:$sfDir",
+        Seq("ev0.parquet", "ev1.parquet")) {
+      val ev = Tables.events(spark, sfDir)
+        .select(col("event_type"), col("event_id"), col("value"),
+                year(col("ts")).cast("string").as("yr"),
+                month(col("ts")).cast("string").as("mon"))
+      val mid = ev.agg(max(col("event_id"))).head().getLong(0) / 2
+      Seq(ev.filter(col("event_id") <= mid), ev.filter(col("event_id") > mid))
     }
 
   /** The shared drain: RocksDB provider + one-file-per-micro-batch replay

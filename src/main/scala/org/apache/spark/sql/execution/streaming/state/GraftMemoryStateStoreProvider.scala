@@ -38,9 +38,10 @@ import org.apache.spark.sql.types.StructType
   * version history ⇒ query fails instead of recovering) or state larger
   * than heap belongs on the RocksDB provider. The drain scaffold selects
   * this class only when no provider is set explicitly on the session — see
-  * `StatefulQueries.withDrainConf` — and
-  * `spark.graft.drain.stateStoreProvider=engine` restores the engine
-  * default for every drain without touching query code. */
+  * `StatefulQueries.withDrainConf` — so pinning
+  * `spark.sql.streaming.stateStore.providerClass` (the engine default
+  * `HDFSBackedStateStoreProvider` included) keeps that provider for every
+  * drain without touching query code. */
 class GraftMemoryStateStoreProvider extends StateStoreProvider {
   import GraftMemoryStateStoreProvider._
 

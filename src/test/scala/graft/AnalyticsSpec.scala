@@ -1215,4 +1215,18 @@ class AnalyticsSpec extends SparkSpec {
     // LPA can only split further (labels refine within components)
     assert(lpa._2 >= cc._2)
   }
+
+  test("failure-path sibling wait is bounded and rethrows the original failure") {
+    import scala.concurrent.duration.DurationInt
+    val boom = new IllegalStateException("core failed")
+    val never = scala.concurrent.Promise[Long]().future
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      Analytics.awaitSiblingThenThrow(never, boom, 200.millis)
+    }
+    assert(thrown eq boom)
+    assert(thrown.getSuppressed.exists(_.isInstanceOf[java.util.concurrent.TimeoutException]),
+      "the timeout should ride along as a suppressed exception")
+    assert((System.nanoTime() - t0) / 1e9 < 30.0, "the wait was not bounded")
+  }
 }

@@ -27,11 +27,16 @@ class MemoryStateStoreSpec extends SparkSpec {
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val HdfsProvider =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
   private def compare(query: String): Unit = {
-    spark.conf.set("spark.graft.drain.stateStoreProvider", "engine")
+    // an explicit pin of the engine default wins over the drain's swap
+    spark.conf.set(ProviderKey, HdfsProvider)
     val engine = try rowsOf(SparkEntry.queries(query)(spark, sfDir))
-    finally spark.conf.unset("spark.graft.drain.stateStoreProvider")
-    // default mode = memory provider
+    finally spark.conf.unset(ProviderKey)
+    // unpinned = memory provider
     val memory = rowsOf(SparkEntry.queries(query)(spark, sfDir))
     assert(memory == engine, s"$query: memory-provider rows diverge from engine provider")
     assert(memory.nonEmpty, s"$query: vacuous comparison")
@@ -63,11 +68,10 @@ class MemoryStateStoreSpec extends SparkSpec {
     // default. Witness: the provider-specific custom state metrics in the
     // drain's progress reports (the memory provider reports none), and the
     // session conf being exactly as the caller left it afterwards.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    val key = ProviderKey
     val cases = Seq(
       ("q1rdb_running_max_rocksdb", None, "rocksdbCommit"),
-      ("q1r_running_max_streaming", Some(hdfs), "loadedMapCache"))
+      ("q1r_running_max_streaming", Some(HdfsProvider), "loadedMapCache"))
     for ((query, pin, metricPrefix) <- cases) {
       val metrics = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       val done = new java.util.concurrent.CountDownLatch(1)

@@ -24,6 +24,26 @@ class StreamingGateSpec extends SparkSpec {
     assert(leftover.isEmpty, s"sink views leaked: ${leftover.mkString(", ")}")
   }
 
+  test("the nanos flag is held inside the copy and drainEvents scopes, then restored") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    var inCopy, inDrain: Option[String] = None
+    StatefulQueries.timeOrderedFilesCopy(spark, s"nanos-scope:${System.nanoTime()}",
+        Seq("n0.parquet")) {
+      inCopy = spark.conf.getOption(key)
+      Seq(spark.range(3).toDF())
+    }
+    assert(!spark.conf.getAll.contains(key), "the copy left the nanos flag set")
+    val drained = StatefulQueries.drainEvents(spark, Sf0001) { stream =>
+      inDrain = spark.conf.getOption(key)
+      stream.select(org.apache.spark.sql.functions.col("event_id"))
+    }
+    assert(drained.count() > 0)
+    assert(inCopy.contains("true"), s"copy scope saw $inCopy")
+    assert(inDrain.contains("true"), s"drainEvents scope saw $inDrain")
+    assert(!spark.conf.getAll.contains(key), "drainEvents left the nanos flag set")
+  }
+
   test("streaming scaffolds adapt to directory-layout parquet fixtures") {
     // the fixture generator has already changed events' physical encoding
     // once; the layout (bare file vs Spark-written directory dataset) is the

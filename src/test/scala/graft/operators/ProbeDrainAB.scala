@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Interleaved single-JVM A/B of the memory-sink drains on the engine
   * default state store provider vs the heap-only drain provider
-  * (GraftMemoryStateStoreProvider) — `spark.graft.drain.stateStoreProvider`
-  * is read at drain time, so the two modes alternate rep by rep and host
-  * drift hits both equally (the ProbeDocSim discipline).
+  * (GraftMemoryStateStoreProvider) — the engine mode pins
+  * `HDFSBackedStateStoreProvider`, which the drain conf scope leaves in
+  * place, and the memory mode unsets the pin; the pin is read at drain
+  * time, so the two modes alternate rep by rep and host drift hits both
+  * equally (the ProbeDocSim discipline).
   * Usage: Test/runMain graft.operators.ProbeDrainAB [sfDir] [reps] [q1,q2,..]
   */
 object ProbeDrainAB {
@@ -26,16 +28,20 @@ object ProbeDrainAB {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    def useProvider(mode: String): Unit =
+      if (mode == "engine") spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+      else spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     // warm both paths once
     for (m <- Seq("engine", "memory")) {
-      spark.conf.set("spark.graft.drain.stateStoreProvider", m)
+      useProvider(m)
       graft.SparkEntry.queries("q1r_running_max_streaming")(spark, sfDir).count()
     }
     for (q <- queries) {
       val times = scala.collection.mutable.Map(
         "engine" -> List.empty[Double], "memory" -> List.empty[Double])
       for (_ <- 1 to reps; m <- Seq("engine", "memory")) {
-        spark.conf.set("spark.graft.drain.stateStoreProvider", m)
+        useProvider(m)
         val t0 = System.nanoTime()
         graft.SparkEntry.queries(q)(spark, sfDir).count()
         times(m) = (System.nanoTime() - t0) / 1e9 :: times(m)
