@@ -1,7 +1,9 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -17,8 +19,39 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** (path, leaf files' (name, length, mtime), explicitly set conf). */
+  private type SchemaKey = (String, Seq[(String, Long, Long)], Map[String, String])
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** The inferred schema of the parquet at `path`, inferred once per state
+    * of its files and session conf: inference runs a Spark job (a footer
+    * read), and every reader call paid it again on files it had already
+    * read. The memo key is the path, every leaf file's name, length and
+    * mtime — a rewrite at the same path infers afresh — and the session's
+    * explicitly set conf, which steers inference (`nanosAsLong` turns
+    * int64-nanos columns from timestamps into longs). Listing the leaves
+    * runs no job. */
+  private def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a located status reads each file's owner
+    // and mode, which on a local file system without the native Hadoop
+    // library forks an `ls` per file
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk) else Seq(st)
+    // a missing path keys no leaves; its inference raises the engine's error
+    val leaves =
+      if (!fs.exists(p)) Seq.empty
+      else walk(fs.getFileStatus(p))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    schemaMemo.computeIfAbsent((p.toString, leaves, spark.conf.getAll),
+      _ => spark.read.parquet(path).schema)
+  }
 
   def region(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "nation")
@@ -97,13 +130,13 @@ object Tables {
     *    (its `part-*` files would never match a `<name>.parquet` leaf glob —
     *    the silent-empty-drain trap the old single-file assertion guarded).
     *
-    * Schema is pinned from the batch scan (file-source streams require an
-    * explicit schema). */
+    * Schema is pinned from the batch scan's (file-source streams require
+    * an explicit schema), inferred once ([[parquetSchema]]). */
   def streamTable(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val schema = spark.read.parquet(path).schema
+    val schema = parquetSchema(spark, path)
     if (fs.getFileStatus(p).isFile)
       spark.readStream.schema(schema)
         .option("pathGlobFilter", s"$name.parquet").parquet(sfDir)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.io.{LocalCheckpointFileManager, Tables}
 import graft.streaming.StatefulOps
 import graft.streaming.StatefulOps.{KSV, KV}
@@ -138,8 +139,13 @@ object StatefulQueries {
 
   /** The drain conf scope: every `writeStream` in this library starts
     * inside it. For the run of `body` it sets
-    *  - the shuffle width (= state store instance count) to `width`, if
-    *    given — sized to the key cardinality, not the session default;
+    *  - the shuffle width (= state store instance count) to
+    *    `min(width, defaultParallelism)`, if a width is given. `width` is
+    *    the caller's ceiling, sized to the key cardinality; the cap keeps
+    *    every state store of a micro-batch in one wave of task slots (the
+    *    engine runs one state-store task per shuffle partition per batch,
+    *    so 8 stores on 4 slots ran two waves and waited for cores). Hosts
+    *    with at least `width` slots run at `width`;
     *  - the checkpoint file manager to [[LocalCheckpointFileManager]]:
     *    the engine default forks `chmod`/`readlink` processes for every
     *    offset-log, commit-log and state file it writes without the native
@@ -167,7 +173,8 @@ object StatefulQueries {
                                           keepProvider: Boolean = false)(body: => T): T = {
     val pinned = spark.conf.getAll.keySet
     val memoryState = !keepProvider && !pinned(ProviderClassKey)
-    val kvs = width.map(w => ShuffleWidthKey -> w.toString).toSeq ++
+    val slots = spark.sparkContext.defaultParallelism
+    val kvs = width.map(w => ShuffleWidthKey -> math.min(w, slots).toString).toSeq ++
       Option.when(!pinned(LocalCheckpointFileManager.ConfKey))(
         LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName) ++
       Option.when(memoryState)(ProviderClassKey -> MemoryDrainProvider)
@@ -192,12 +199,13 @@ object StatefulQueries {
 
   /** Drive `op` through the REAL micro-batch engine over the raw `events`
     * file stream ([[Tables.streamTable]], normalized): readStream → op →
-    * `outputMode` memory sink, drained synchronously at state width 8 —
-    * every shuffle partition is a state store instance paying
-    * snapshot+commit work per micro-batch, so width is sized to the key
-    * cardinality (years / event types / hour buckets), not the session
-    * default. The nanos flag is held while the stream is built and
-    * drained, and restored after, like the width. */
+    * `outputMode` memory sink, drained synchronously at state width 8
+    * capped at the task slots ([[withDrainConf]]) — every shuffle
+    * partition is a state store instance paying snapshot+commit work per
+    * micro-batch, so width is sized to the key cardinality (years / event
+    * types / hour buckets), not the session default. The nanos flag is
+    * held while the stream is built and drained, and restored after, like
+    * the width. */
   private[graft] def drainEvents(spark: SparkSession, sfDir: String,
                                  outputMode: String = "append")
                                 (op: DataFrame => DataFrame): DataFrame =
@@ -271,10 +279,10 @@ object StatefulQueries {
     * text lines from an in-process loopback server ([[graft.io.SocketText]]),
     * run `op` on the `value: String` stream, drain to a memory sink. The
     * socket source has no replay and no end-of-stream marker, so the drain
-    * is coordinated by OBSERVATION: chunk N+1 is sent only after the sink
-    * holds `expected(N)` rows (cumulative output counts per chunk), which
-    * both detects completion and forces a micro-batch boundary between
-    * chunks — chunk 2's rows provably fold into state written by an
+    * is coordinated by OBSERVATION: chunk N+1 is sent only after the query
+    * has written `expected(N)` rows (cumulative output counts per chunk),
+    * which both detects completion and forces a micro-batch boundary
+    * between chunks — chunk 2's rows provably fold into state written by an
     * earlier batch. The connection stays open until the query stops (the
     * source treats EOF as failure); `check` runs against the live query
     * after the last chunk lands (e.g. the ≥2-batch witness). */
@@ -295,9 +303,10 @@ object StatefulQueries {
             .queryName(qn).start()
           try {
             srv.accept()
+            val rowsByBatch = scala.collection.mutable.Map.empty[Long, Long]
             chunks.zip(expected).foreach { case (chunk, n) =>
               srv.send(chunk)
-              awaitSinkCount(spark, qn, n)
+              awaitSinkRows(q, n, rowsByBatch)
             }
             check(q)
           } finally { q.stop(); q.awaitTermination() }
@@ -308,19 +317,33 @@ object StatefulQueries {
       } finally srv.close()
     }
 
-  /** Poll a memory sink until it holds `n` rows (the socket drain's only
-    * completion signal — the source cannot say "done"). Counting a memory
-    * sink is a driver-local scan, so the poll is cheap; the deadline turns
-    * a wedged stream into a diagnosis instead of a hang. */
-  private def awaitSinkCount(spark: SparkSession, qn: String, n: Long,
-                             timeoutMs: Long = 120000): Unit = {
+  /** Wait until the running query `q` has written `n` rows, read from its
+    * own progress reports (summed `sink.numOutputRows`) — the socket
+    * drain's only completion signal, since the source cannot say "done".
+    * Reading progress runs no Spark job, where counting the memory sink ran
+    * one per poll. `rowsByBatch` remembers each batch's count by id across
+    * calls, so a batch that ages out of `recentProgress` is still counted;
+    * an idle trigger's report carries no sink count (-1) and counts 0. The
+    * deadline turns a wedged stream into a diagnosis instead of a hang, and
+    * a failed query fails the wait at once. */
+  private def awaitSinkRows(q: StreamingQuery, n: Long,
+                            rowsByBatch: scala.collection.mutable.Map[Long, Long],
+                            timeoutMs: Long = 120000): Unit = {
+    def written(): Long = {
+      q.recentProgress.foreach { p =>
+        rowsByBatch(p.batchId) = math.max(rowsByBatch.getOrElse(p.batchId, 0L),
+                                          p.sink.numOutputRows)
+      }
+      rowsByBatch.values.sum
+    }
     val deadline = System.nanoTime() + timeoutMs * 1000000L
-    var cur = spark.table(qn).count()
+    var cur = written()
     while (cur < n) {
+      q.exception.foreach(e => throw e)
       if (System.nanoTime() > deadline)
-        sys.error(s"socket drain stalled: sink $qn holds $cur of $n expected rows")
+        sys.error(s"socket drain stalled: sink ${q.name} holds $cur of $n expected rows")
       Thread.sleep(25)
-      cur = spark.table(qn).count()
+      cur = written()
     }
   }
 
@@ -391,7 +414,7 @@ object StatefulQueries {
     val srcDir = Files.createDirectory(work.resolve("src"))
     val ckpt = work.resolve("ckpt").toString
     val outDir = work.resolve("out").toString
-    val schema = spark.read.parquet(copyDir).schema
+    val schema = copySchema(spark, copyDir)
     def runOnce(): Unit = withDrainConf(spark, Some(8), keepProvider = true) {
       val stream = spark.readStream.schema(schema).parquet(srcDir.toString)
       val out = StatefulOps.blockAverage(stream
@@ -433,12 +456,17 @@ object StatefulQueries {
   private val copyCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Each copy's schema, keyed by its directory ([[copySchema]]). */
+  private val copySchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   /** Write `frames` as single parquet files named `names`, with modification
     * times 60s apart, so a `maxFilesPerTrigger(1)` file stream replays them
     * as time-ordered micro-batches (the file source lists pending files
-    * oldest-mtime-first). Cached per `cacheKey`. The writes run under the
-    * nanos flag ([[withNanosAsLong]]), which `Tables.events` frames need
-    * at execution; a cache hit sets nothing. */
+    * oldest-mtime-first). Cached per `cacheKey`; its schema is kept by
+    * [[copySchema]]. The writes run under the nanos flag
+    * ([[withNanosAsLong]]), which `Tables.events` frames need at execution;
+    * a cache hit sets nothing. */
   private[graft] def timeOrderedFilesCopy(
       spark: SparkSession, cacheKey: String, names: Seq[String])
       (frames: => Seq[DataFrame]): String =
@@ -469,12 +497,19 @@ object StatefulQueries {
       dir.toString
     })
 
+  /** The schema of a [[timeOrderedFilesCopy]] dir, inferred by one batch
+    * read of the finished copy on first use and kept beside it: a copy is
+    * never rewritten, so every later replay reads the kept schema. */
+  private[graft] def copySchema(spark: SparkSession, dir: String): StructType =
+    copySchemas.computeIfAbsent(dir, _ => spark.read.parquet(dir).schema)
+
   /** The one-file-per-trigger replay source over a [[timeOrderedFilesCopy]]
-    * dir: schema pinned from a batch read (file streams need one) and
+    * dir: schema pinned from the copy ([[copySchema]]: file streams need
+    * one, and a copy's is inferred once, not per replay) and
     * `maxFilesPerTrigger` = 1, so each file is its own micro-batch
     * (Trigger.AvailableNow honors the read limit). */
   private[graft] def replayStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(dir).schema)
+    spark.readStream.schema(copySchema(spark, dir))
       .option("maxFilesPerTrigger", "1").parquet(dir)
 
   /** The one foreachBatch drain: replay `dir` ([[replayStream]]) through

@@ -88,7 +88,7 @@ object TwsQueries {
     val srcDir = Files.createDirectory(work.resolve("src"))
     val ckpt = work.resolve("ckpt").toString
     val outDir = work.resolve("out").toString
-    val schema = spark.read.parquet(copyDir).schema
+    val schema = StatefulQueries.copySchema(spark, copyDir)
     def runOnce(): Unit =
       StatefulQueries.withRocksDbStateStore(spark) {
         StatefulQueries.withDrainConf(spark, Some(8), keepProvider = true) {
